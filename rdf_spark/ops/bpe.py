@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.ops.retrieval import tokenize_lower
 
 SEP = "\x1f"
@@ -73,9 +74,8 @@ def _merge_expr(seq_col, x: str, y: str):
     )
 
 
-#: driver fast-path cap on word TYPES (cf. graph._COMPONENT_COLLECT_MAX)
-_VOCAB_COLLECT_MAX = 200_000
-#: and on merges x word-types (each merge round scans the vocabulary)
+#: work bound of the driver replica on merges x word types (each merge
+#: round scans the vocabulary; the vocabulary is probed by ops.fastpath)
 _LOCAL_WORK_MAX = 20_000_000
 
 
@@ -117,15 +117,18 @@ def train_bpe(
     early only when no adjacent pair is left anywhere (degenerate
     corpora); tie pairs resolve (count DESC, x ASC, y ASC), so the
     schedule is deterministic and engine-replayable."""
-    vocab = word_vocab(docs, text_col, id_col).localCheckpoint(eager=True)
-    head = vocab.limit(_VOCAB_COLLECT_MAX + 1).collect()
-    # the merges x vocab work product bounds the single-threaded driver
-    # loop (a 30k-merge run over a near-cap vocabulary belongs on the
-    # cluster even though the vocabulary alone fits)
-    if (len(head) <= _VOCAB_COLLECT_MAX
-            and n_merges * max(1, len(head)) <= _LOCAL_WORK_MAX):
-        return _train_bpe_local(
-            [(r["seq"], r["n"]) for r in head], n_merges)
+
+    def local(head):
+        # the merges x vocab work product bounds the single-threaded
+        # driver loop (a 30k-merge run over a near-cap vocabulary belongs
+        # on the cluster even though the vocabulary alone fits)
+        if n_merges * max(1, len(head)) > _LOCAL_WORK_MAX:
+            return None
+        return _train_bpe_local([(r["seq"], r["n"]) for r in head], n_merges)
+
+    out, (vocab,) = fastpath.try_local([word_vocab(docs, text_col, id_col)], local)
+    if out is not None:
+        return out
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         syms = _symbols(F.col("seq"))

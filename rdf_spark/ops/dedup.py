@@ -275,7 +275,6 @@ def near_dup_clusters(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cc_collect_max: int = 100_000,
     **minhash_kwargs,
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: verified MinHash-LSH pairs → transitive
@@ -285,61 +284,25 @@ def near_dup_clusters(
     ``doc_id == cluster`` rows as the retained representatives and drop
     the rest.  Docs with no near-duplicate form singleton clusters.
 
-    The pair graph is usually TINY relative to the corpus (near-dup
-    rates are low after exact dedup), so when it has ≤ ``cc_collect_max``
-    edges the transitive closure runs as a driver-side union-find (one
-    bounded collect, a few MB at the cap) instead of the iterative
-    distributed CC, whose per-round job overhead dominates on small
-    graphs.  Larger graphs — or ``cc_collect_max=0`` — take
-    :func:`rdf_spark.ops.graph.connected_components` (the 100 TB path).
-    Both paths are equivalence-tested.
+    The closure is :func:`rdf_spark.ops.graph.connected_components_star`:
+    the pair graph is usually TINY relative to the corpus (near-dup
+    rates are low after exact dedup), so it normally runs as a driver
+    union-find (:mod:`rdf_spark.ops.fastpath`), and larger graphs take
+    the O(log n)-round distributed path — neither has a diameter limit.
     """
-    from pyspark import StorageLevel
+    from rdf_spark.ops import fastpath
+    from rdf_spark.ops.graph import connected_components_star
+    from rdf_spark.ops.planutil import materialize_for_fanout
 
-    from rdf_spark.ops.graph import connected_components
-
-    spark = df.sparkSession
-    pairs = minhash_near_duplicates(df, text_col, id_col, **minhash_kwargs)
-    comps = None
-    if cc_collect_max:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        head = pairs.select("a", "b").limit(cc_collect_max + 1).collect()
-        if len(head) <= cc_collect_max:
-            parent: dict = {}
-
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in head:
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[ra] = rb
-            root_min: dict = {}
-            for n in parent:
-                r = find(n)
-                m = root_min.get(r)
-                if m is None or n < m:
-                    root_min[r] = n
-            a_type = dict(pairs.dtypes)["a"]
-            rows = [(n, root_min[find(n)]) for n in parent]
-            comps = (
-                spark.createDataFrame(rows, f"{id_col} {a_type}, cluster {a_type}")
-                if rows else None
-            )
-            pairs.unpersist()
-    if comps is None and (not cc_collect_max or len(head) > cc_collect_max):
-        comps = connected_components(pairs, "a", "b").select(
-            F.col("node").alias(id_col), F.col("comp").alias("cluster")
-        )
-        if cc_collect_max:
-            pairs.unpersist()
-    if comps is None:  # no near-dup pairs at all: every doc is a singleton
-        return df.select(id_col).select(id_col, F.col(id_col).alias("cluster"))
+    raw = minhash_near_duplicates(df, text_col, id_col, **minhash_kwargs)
+    # cc_star reads the pairs twice (edges and nodes): run the
+    # MinHash/Jaccard Python stages once
+    pairs = materialize_for_fanout(raw)
+    comps = connected_components_star(pairs, "a", "b").select(
+        F.col("node").alias(id_col), F.col("comp").alias("cluster")
+    )
+    if pairs is not raw:
+        fastpath.release(pairs, comps)
     return (
         df.select(id_col)
         .join(comps, id_col, "left")

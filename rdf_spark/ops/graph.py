@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rdf_spark.ops import fastpath
 from rdf_spark.terms import RDF_TYPE
 
 
@@ -284,15 +285,6 @@ def bgp_match(
     return result.distinct() if distinct else result
 
 
-#: driver fast-path cap for the component ops below (distinct edges;
-#: node sets are capped at 2x).  Same economics as sparql._closure_pairs:
-#: a bench-sized graph's O(log n) distributed rounds are pure scheduling
-#: (~2 jobs + a localCheckpoint per round, tens of tiny stages), while a
-#: guarded collect + in-process union-find/label-prop is one job.  Graphs
-#: past the cap keep the scale-correct distributed algorithms.
-_COMPONENT_COLLECT_MAX = 200_000
-
-
 def _sorted_rows(rows):
     """Deterministic output order; None sorts LAST per column (never
     compared to a value — the tuple key short-circuits on the
@@ -315,6 +307,17 @@ def _pair_type(df: DataFrame, a: str, b: str):
     t = _coerced_type(df, a, b)
     return lambda n1, n2: StructType(
         [StructField(n1, t), StructField(n2, t)]
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The deduped undirected ``(u, v)`` edge set, ``u < v``; self-loops
+    and null-endpoint edges dropped (the ``u != v`` SQL filter)."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .dropDuplicates(["u", "v"])
     )
 
 
@@ -361,8 +364,7 @@ def connected_components_star(
     """
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # nodes whose only edges are self-loops must still appear (singleton
-    # components) — same coverage as connected_components.  Left lazy:
-    # read exactly once, by the final singleton anti-join.
+    # components) — same coverage as connected_components
     all_nodes = (
         raw.select(F.col("u").alias("node"))
         .unionByName(raw.select(F.col("v").alias("node")))
@@ -371,30 +373,28 @@ def connected_components_star(
     # orient + symmetrize once; invariant kept: edges point small ← large
     # (null-keyed and self-loop edges are dropped here exactly as the
     # u != v SQL filter drops them; their endpoints stay in all_nodes)
-    # checkpoint BEFORE the cap probe: a probe on the raw plan would run
-    # the dedup shuffle's map side once for the probe and again for the
-    # checkpoint on over-cap graphs (the scale path must stay one-pass)
     oriented = (
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
     )
-    head = oriented.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        nodes = all_nodes.limit(2 * _COMPONENT_COLLECT_MAX + 1).collect()
-        if len(nodes) <= 2 * _COMPONENT_COLLECT_MAX:
-            uf = _UnionFind()
-            for r in head:
-                uf.union(r[0], r[1])
-            out = [
-                (n.node, uf.find(n.node) if n.node in uf.parent else n.node)
-                for n in nodes
-            ]
-            return edges.sparkSession.createDataFrame(
-                _sorted_rows(out), _pair_type(raw, "u", "v")("node", "comp")
-            )
-    e = oriented
+
+    def local(head, nodes):
+        uf = _UnionFind()
+        for r in head:
+            uf.union(r[0], r[1])
+        out = [
+            (n.node, uf.find(n.node) if n.node in uf.parent else n.node)
+            for n in nodes
+        ]
+        return edges.sparkSession.createDataFrame(
+            _sorted_rows(out), _pair_type(raw, "u", "v")("node", "comp")
+        )
+
+    out, (e, all_nodes) = fastpath.try_local(
+        [oriented, all_nodes], local, factors=(1, 2))
+    if out is not None:
+        return out
     n = e.count()
 
     def _min_nbr(df):
@@ -526,10 +526,12 @@ def connected_components(
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
-    head = sym.limit(2 * _COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= 2 * _COMPONENT_COLLECT_MAX:
-        return _cc_min_label_local(edges, e, head, max_iter)
+    out, (sym,) = fastpath.try_local(
+        [sym.dropDuplicates(["u", "v"])],
+        lambda head: _cc_min_label_local(edges, e, head, max_iter),
+        factors=(2,))
+    if out is not None:
+        return out
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -658,20 +660,26 @@ def pagerank(
     driver movement (one long), same as connected_components' round
     counter.
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    proj = edges.select(src.alias("_s"), dst.alias("_d"))
-    head = proj.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _power_iteration_local(
-            edges.sparkSession, proj, head, n_iter, damping, round_to)
-    nodes = (
-        edges.select(src.alias("node"))
-        .unionByName(edges.select(dst.alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    out_deg = edges.groupBy(src.alias("node")).agg(
+    proj = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+    out, (proj,) = fastpath.try_local([proj], lambda head: _power_iteration_local(
+        edges.sparkSession, proj, head, n_iter, damping, round_to))
+    if out is not None:
+        return out
+    return _power_iteration_rounds(proj, n_iter, damping, round_to)
+
+
+def _power_iteration_rounds(proj: DataFrame, n_iter: int, damping: float,
+                            round_to: int, seeds=None) -> DataFrame:
+    """The distributed schedule of :func:`pagerank` (``seeds=None``) and
+    :func:`personalized_pagerank` over the projected ``(_s, _d)``
+    edges."""
+    nodes = proj.select(F.col("_s").alias("node")).unionByName(
+        proj.select(F.col("_d").alias("node")))
+    if seeds is not None:
+        nodes = nodes.unionByName(proj.sparkSession.createDataFrame(
+            [(s,) for s in seeds], schema=nodes.schema))
+    nodes = nodes.distinct().localCheckpoint(eager=True)
+    out_deg = proj.groupBy(F.col("_s").alias("node")).agg(
         F.count(F.lit(1)).alias("od")
     )
     # the edges⋈out_deg join is iteration-invariant — hoist and
@@ -679,12 +687,24 @@ def pagerank(
     # against the current ranks instead of re-scanning the input twice
     # (same rows, same arithmetic: every edge has exactly one od)
     e_od = (
-        edges.select(src.alias("node"), dst.alias("_dst"))
+        proj.select(F.col("_s").alias("node"), F.col("_d").alias("_dst"))
         .join(out_deg, "node")
         .localCheckpoint(eager=True)
     )
-    base = (1.0 - damping) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    if seeds is None:
+        n = nodes.count()
+        base = F.lit((1.0 - damping) / n)
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    else:
+        is_seed = F.col("node").isin(seeds)
+        base = F.when(
+            is_seed, F.lit((1.0 - damping) / len(seeds))
+        ).otherwise(F.lit(0.0))
+        ranks = nodes.select(
+            "node",
+            F.when(is_seed, F.lit(1.0 / len(seeds)))
+            .otherwise(F.lit(0.0)).alias("rank"),
+        )
     for _ in range(n_iter):
         contrib = (
             e_od.join(ranks, "node")
@@ -701,7 +721,7 @@ def pagerank(
             .select(
                 "node",
                 F.round(
-                    F.lit(base)
+                    base
                     + F.lit(damping)
                     * F.coalesce(F.col("m").cast("double"), F.lit(0.0)),
                     round_to,
@@ -733,11 +753,11 @@ def hits(
     schedule matches bit-for-bit.  Per-iteration ``localCheckpoint``
     keeps the plan O(1); multi-edges contribute once per occurrence.
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    proj = edges.select(src.alias("src"), dst.alias("dst"))
-    head = proj.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _hits_local(edges.sparkSession, proj, head, n_iter, round_to)
+    proj = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    out, (proj,) = fastpath.try_local([proj], lambda head: _hits_local(
+        edges.sparkSession, proj, head, n_iter, round_to))
+    if out is not None:
+        return out
     # 2 scans per iteration (auth + hub passes) — materialize the
     # projected edge list once
     e = proj.localCheckpoint(eager=True)
@@ -876,18 +896,11 @@ def triangle_count(
     scale.  Output is orientation-invariant: each triangle is counted
     exactly once and credited to all three corners.
     """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # checkpoint before the probe (one-pass on over-cap graphs); the
-    # 5 downstream branch reads reuse it either way
-    und = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
-    )
-    head = und.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _triangle_count_local(edges.sparkSession, und, head)
+    und = _undirected(edges, src, dst)
+    out, (und,) = fastpath.try_local([und], lambda head: _triangle_count_local(
+        edges.sparkSession, und, head))
+    if out is not None:
+        return out
     nodes = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -1065,20 +1078,14 @@ def k_truss(
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-    und = und.localCheckpoint(eager=True)
+    und = _undirected(edges, src, dst)
     thresh = k - 2
     if thresh == 0:
         return und
-    head = und.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _k_truss_local(edges.sparkSession, und, head, thresh,
-                              max_iter)
+    out, (und,) = fastpath.try_local([und], lambda head: _k_truss_local(
+        edges.sparkSession, und, head, thresh, max_iter))
+    if out is not None:
+        return out
     n_edges = und.count()
     for _ in range(max_iter):
         if n_edges == 0:
@@ -1220,16 +1227,11 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-    und = und.localCheckpoint(eager=True)
-    head = und.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _k_core_local(edges.sparkSession, und, head, k, max_iter)
+    und = _undirected(edges, src, dst)
+    out, (und,) = fastpath.try_local([und], lambda head: _k_core_local(
+        edges.sparkSession, und, head, k, max_iter))
+    if out is not None:
+        return out
     n_edges = und.count()
     for _ in range(max_iter):
         if n_edges == 0:
@@ -1317,16 +1319,11 @@ def label_propagation(
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-    und = und.localCheckpoint(eager=True)
-    head = und.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _lpa_local(edges.sparkSession, und, head, n_iter)
+    und = _undirected(edges, src, dst)
+    out, (und,) = fastpath.try_local([und], lambda head: _lpa_local(
+        edges.sparkSession, und, head, n_iter))
+    if out is not None:
+        return out
     adj = (
         und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionByName(
@@ -1392,19 +1389,11 @@ def link_predict(
     summed as DECIMAL(24,9) so a pair's score is independent of the
     order its wedges reduce in (the bm25/pagerank exactness scheme).
     """
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-    und = und.localCheckpoint(eager=True)
-    head = und.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        local = _link_predict_local(edges.sparkSession, und, head,
-                                    max_degree, min_common)
-        if local is not None:
-            return local
+    und = _undirected(edges, src, dst)
+    out, (und,) = fastpath.try_local([und], lambda head: _link_predict_local(
+        edges.sparkSession, und, head, max_degree, min_common))
+    if out is not None:
+        return out
     adj = und.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         und.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
@@ -1477,65 +1466,12 @@ def personalized_pagerank(
     seeds = sorted(set(seeds))
     if not seeds:
         raise ValueError("personalized_pagerank needs >= 1 seed")
-    src, dst = F.col(src_col), F.col(dst_col)
-    spark = edges.sparkSession
-    proj = edges.select(src.alias("_s"), dst.alias("_d"))
-    head = proj.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _power_iteration_local(
-            spark, proj, head, n_iter, damping, round_to, seeds=seeds)
-    seed_df = spark.createDataFrame(
-        [(s,) for s in seeds], schema=edges.select(src.alias("node")).schema
-    )
-    nodes = (
-        edges.select(src.alias("node"))
-        .unionByName(edges.select(dst.alias("node")))
-        .unionByName(seed_df)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_deg = edges.groupBy(src.alias("node")).agg(
-        F.count(F.lit(1)).alias("od")
-    )
-    # iteration-invariant edges⋈out_deg hoisted out of the loop (the
-    # pagerank convention — same rows, same arithmetic)
-    e_od = (
-        edges.select(src.alias("node"), dst.alias("_dst"))
-        .join(out_deg, "node")
-        .localCheckpoint(eager=True)
-    )
-    is_seed = F.col("node").isin(seeds)
-    restart = 1.0 / len(seeds)
-    base = (1.0 - damping) / len(seeds)
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(restart)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    for _ in range(n_iter):
-        contrib = (
-            e_od.join(ranks, "node")
-            .select(
-                F.col("_dst").alias("node"),
-                F.round(F.col("rank") / F.col("od"), 14).alias("c"),
-            )
-        )
-        sums = contrib.groupBy("node").agg(
-            F.sum(F.col("c").cast("decimal(38,14)")).alias("m")
-        )
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    F.when(is_seed, F.lit(base)).otherwise(F.lit(0.0))
-                    + F.lit(damping)
-                    * F.coalesce(F.col("m").cast("double"), F.lit(0.0)),
-                    round_to,
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    proj = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+    out, (proj,) = fastpath.try_local([proj], lambda head: _power_iteration_local(
+        edges.sparkSession, proj, head, n_iter, damping, round_to, seeds=seeds))
+    if out is not None:
+        return out
+    return _power_iteration_rounds(proj, n_iter, damping, round_to, seeds=seeds)
 
 
 def _scc_local(
@@ -1645,16 +1581,12 @@ def strongly_connected_components(
     pure path — ``max_phases``/``max_rounds`` raise instead of looping;
     web link graphs converge in a handful of phases).
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    distinct_edges = (
-        edges.select(src.alias("u"), dst.alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    head = distinct_edges.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) <= _COMPONENT_COLLECT_MAX:
-        return _scc_local(edges, distinct_edges, head, max_phases)
-    live_edges = distinct_edges
+    distinct_edges = edges.select(
+        F.col(src_col).alias("u"), F.col(dst_col).alias("v")).distinct()
+    out, (live_edges,) = fastpath.try_local([distinct_edges], lambda head: _scc_local(
+        edges, distinct_edges, head, max_phases))
+    if out is not None:
+        return out
     active = (
         live_edges.select(F.col("u").alias("node"))
         .unionByName(live_edges.select(F.col("v").alias("node")))
@@ -1759,10 +1691,9 @@ def strongly_connected_components(
     return done
 
 
-def _sssp_local(spark, e: DataFrame, sources: DataFrame,
-                dist_type: str, max_iter: int):
-    """Driver Bellman-Ford for edge sets under the collect cap, or None
-    to take the distributed path.  Exact replica of the round schedule:
+def _sssp_local(spark, head, srcs, dist_type: str, max_iter: int):
+    """Driver Bellman-Ford over the collected edges and distinct
+    sources.  Exact replica of the round schedule:
     the same weight guard (null/negative/fractional-truncated raise),
     synchronous relaxation from the PREVIOUS round's distances, the same
     changed test (new node or strict improvement), the same
@@ -1778,18 +1709,6 @@ def _sssp_local(spark, e: DataFrame, sources: DataFrame,
         StructType,
     )
 
-    head = e.limit(_COMPONENT_COLLECT_MAX + 1).collect()
-    if len(head) > _COMPONENT_COLLECT_MAX:
-        return None
-    [c] = sources.columns
-    srcs = (
-        sources.select(F.col(c).cast("string").alias("node"))
-        .distinct()
-        .limit(2 * _COMPONENT_COLLECT_MAX + 1)
-        .collect()
-    )
-    if len(srcs) > 2 * _COMPONENT_COLLECT_MAX:
-        return None
     if any(r["_w"] is None or r["_w"] < 0 or r["_frac"] for r in head):
         raise ValueError(
             "edge weights must be non-null, non-negative, numeric, and "
@@ -1886,9 +1805,14 @@ def shortest_paths(
         w.alias("_w"),
         nonintegral.alias("_frac"),
     ).filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
-    local = _sssp_local(edges.sparkSession, e, sources, dist_type, max_iter)
-    if local is not None:
-        return local
+    [c] = sources.columns
+    srcs = sources.select(F.col(c).cast("string").alias("node")).distinct()
+    out, (e, srcs) = fastpath.try_local(
+        [e, srcs], lambda head, src_rows: _sssp_local(
+            edges.sparkSession, head, src_rows, dist_type, max_iter),
+        factors=(1, 2))
+    if out is not None:
+        return out
     # null weights (incl. cast failures from a non-numeric weight_col)
     # would poison min() with null distances that the plain-equality
     # convergence anti-join counts as "changed" forever (the round-2
@@ -1904,11 +1828,7 @@ def shortest_paths(
             "integral-valued (use a decimal-typed column for exact "
             "fractional weights)")
     e = e.drop("_frac")
-    [c] = sources.columns
-    dist = sources.select(
-        F.col(c).cast("string").alias("node"),
-        F.lit(0).cast(dist_type).alias("dist"),
-    ).distinct().localCheckpoint(eager=True)
+    dist = srcs.select("node", F.lit(0).cast(dist_type).alias("dist"))
     for _ in range(max_iter):
         # the convergence signal (a node appeared or its distance
         # improved) is aggregated inside the round's one checkpointed

@@ -39,11 +39,12 @@ _PY_NODES = (
 _GEN_NODES = ("Generate",)
 
 
-def _expensive_to_rescan(df: DataFrame) -> bool:
+def plan_has(df: DataFrame, nodes: tuple[str, ...]) -> bool:
+    """Whether ``df``'s physical plan contains one of the node names."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple"
     )
-    return any(n in plan for n in _PY_NODES + _GEN_NODES)
+    return any(n in plan for n in nodes)
 
 
 def materialize_for_fanout(df: DataFrame) -> DataFrame:
@@ -55,6 +56,6 @@ def materialize_for_fanout(df: DataFrame) -> DataFrame:
     Streaming frames are returned unchanged (cannot checkpoint)."""
     if df.isStreaming:
         return df
-    if _expensive_to_rescan(df):
+    if plan_has(df, _PY_NODES + _GEN_NODES):
         return df.localCheckpoint(eager=True)
     return df

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.terms import RDF_NS
 
 RDF_FIRST = RDF_NS + "first"
@@ -52,23 +53,18 @@ def _distinct_pairs(df: DataFrame) -> DataFrame:
     return df.distinct()
 
 
-#: driver fast-path caps (cf. ops.graph._COMPONENT_COLLECT_MAX): the
-#: predicate-filtered first/rest cell tables are ontology-sized for
-#: real stores; past the caps the distributed pointer-doubling runs.
-_COLLECT_MAX = 200_000
+#: output bound of the driver replica (the first/rest cell tables are
+#: ontology-sized for real stores and probed by ops.fastpath; past
+#: either, the distributed pointer-doubling runs)
 _LOCAL_PAIR_MAX = 2_000_000
 
 
-class _TooLarge(Exception):
-    pass
-
-
-def _reach_pairs_local(rests: list, max_len: int) -> set:
+def _reach_pairs_local(rests: list, max_len: int) -> set | None:
     """All (a, b, d) with a rest-path a→b of length 1 ≤ d ≤ max_len−1 —
     exactly the fixpoint of the distance-capped pointer-doubling (any
     d ≤ max_len−1 splits into halves also under the cap, so the
     distributed rounds generate the full set).  Degenerate multi-rest
-    branching can blow this up; bail past ``_LOCAL_PAIR_MAX``."""
+    branching can blow this up; None past ``_LOCAL_PAIR_MAX``."""
     nxt: dict = {}
     for node, nx in rests:
         nxt.setdefault(node, []).append(nx)
@@ -85,7 +81,7 @@ def _reach_pairs_local(rests: list, max_len: int) -> set:
             for b in step:
                 out.add((a, b, d))
             if len(out) > _LOCAL_PAIR_MAX:
-                raise _TooLarge
+                return None
             frontier = step
     return out
 
@@ -93,9 +89,12 @@ def _reach_pairs_local(rests: list, max_len: int) -> set:
 def _rdf_lists_local(spark, firsts_rows, rests_rows, max_len, stats,
                      member_schema):
     """In-process replica of the branch algebra below — identical
-    well-formedness rules over the same distinct first/rest cell sets."""
+    well-formedness rules over the same distinct first/rest cell sets;
+    None past the pair bound."""
     rests = [(r["node"], r["next"]) for r in rests_rows]
     pairs = _reach_pairs_local(rests, max_len)
+    if pairs is None:
+        return None
     first_nodes = {r["node"] for r in firsts_rows}
     rest_targets = {b for _, b in rests}
     heads = first_nodes - rest_targets
@@ -174,14 +173,7 @@ def rdf_lists(
         .distinct()
     )
 
-    # checkpoint before the cap probe: the probe would otherwise run
-    # each distinct's map side once for the collect and again for the
-    # ~10 branch reads on over-cap stores
-    firsts = firsts.localCheckpoint(eager=True)
-    rests = rests.localCheckpoint(eager=True)
-    f_head = firsts.limit(_COLLECT_MAX + 1).collect()
-    r_head = rests.limit(_COLLECT_MAX + 1).collect()
-    if len(f_head) <= _COLLECT_MAX and len(r_head) <= _COLLECT_MAX:
+    def local(f_head, r_head):
         from pyspark.sql.types import IntegerType, StructField, StructType
 
         fs = firsts.schema
@@ -192,12 +184,13 @@ def rdf_lists(
                for n in ("member", "member_kind",
                          "member_datatype", "member_lang")]
         )
-        try:
-            return _rdf_lists_local(
-                triples.sparkSession, f_head, r_head, max_len, stats,
-                member_schema)
-        except _TooLarge:
-            pass
+        return _rdf_lists_local(
+            triples.sparkSession, f_head, r_head, max_len, stats,
+            member_schema)
+
+    out, (firsts, rests) = fastpath.try_local([firsts, rests], local)
+    if out is not None:
+        return out
 
     # structural heads: cells not pointed to by any rdf:rest
     heads = (

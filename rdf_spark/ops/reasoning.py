@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.terms import KIND_IRI, KIND_LITERAL, RDF_TYPE
 
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -42,12 +43,6 @@ RDFS_RANGE = RDFS_NS + "range"
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 _SCHEMA_MAX_ITER = 30
-# ontologies are small by contract (module docstring); an edge set at or
-# under this cap is closed on the driver (one collect job instead of
-# O(log diameter) shuffle+checkpoint+count rounds — measured 2.7 s of
-# scheduling for a ONE-edge input on a 32-core local box), anything
-# bigger falls back to the distributed iterative squaring
-_SCHEMA_COLLECT_MAX = 100_000
 
 
 def _closure_local(pairs: list[tuple]) -> list[tuple]:
@@ -80,12 +75,13 @@ def _closure_local(pairs: list[tuple]) -> list[tuple]:
 def _schema_closure_with_local(
     edges: DataFrame,
     max_iter: int = _SCHEMA_MAX_ITER,
-    collect_max: int = _SCHEMA_COLLECT_MAX,
 ) -> tuple[DataFrame, list[tuple] | None]:
     """Transitive closure of a small ``(sub, sup)`` schema edge set.
 
-    Fast path: when the distinct edge set fits ``collect_max`` it is
-    collected and closed on the driver (the broadcast-small-side
+    Ontologies are small by contract (module docstring), so the distinct
+    edge set normally fits the driver fast path (ops.fastpath: one
+    collect job instead of O(log diameter) shuffle+checkpoint+count
+    rounds) and is closed on the driver (the broadcast-small-side
     pattern — the ontology is joined broadcast downstream anyway, so
     the driver holds it either way), returning ``(closure_df,
     local_pairs)`` so callers can make plan decisions (e.g. skip empty
@@ -93,15 +89,16 @@ def _schema_closure_with_local(
     squaring (R ← R ∪ R∘R, O(log diameter) rounds, per-round
     localCheckpoint — same scheme as sparql._closure_pairs), returning
     ``(closure_df, None)``."""
-    spark = edges.sparkSession
-    distinct = edges.distinct()
-    head = distinct.limit(collect_max + 1).collect()
-    if len(head) <= collect_max:
+
+    def local(head):
         closed = _closure_local([(r[0], r[1]) for r in head])
         cols = edges.columns
         schema = "%s string, %s string" % (cols[0], cols[1])
-        return spark.createDataFrame(closed, schema), closed
-    result = distinct.localCheckpoint(eager=True)
+        return edges.sparkSession.createDataFrame(closed, schema), closed
+
+    out, (result,) = fastpath.try_local([edges.distinct()], local)
+    if out is not None:
+        return out
     n = result.count()
     for _ in range(max_iter):
         if n == 0:
@@ -190,14 +187,9 @@ def rdfs_closure(
     schema_preds = (
         RDFS_SUBCLASSOF, RDFS_SUBPROPERTYOF, RDFS_DOMAIN, RDFS_RANGE,
     )
-    schema_rows = (
-        src.filter(F.col("p").isin(*schema_preds))
-        .select("s", "p", "o")
-        .limit(_SCHEMA_COLLECT_MAX + 1)
-        .collect()
-    )
     pair_schema = "sub string, sup string"
-    if len(schema_rows) <= _SCHEMA_COLLECT_MAX:
+
+    def local(schema_rows):
         by_pred: dict[str, set] = {p: set() for p in schema_preds}
         for s, p, o in schema_rows:
             if s is None:  # a null subject can never join an instance row
@@ -230,7 +222,6 @@ def rdfs_closure(
                     full.add((p, d))
             return sorted(full, key=lambda t: (t[0], t[1] or ""))
 
-        sp_local: list | None = sp_pairs
         sp_plus = spark.createDataFrame(sorted(sp_pairs), pair_schema)
         sc_plus = spark.createDataFrame(sorted(sc_pairs), pair_schema)
         dom_full = spark.createDataFrame(
@@ -239,6 +230,13 @@ def rdfs_closure(
         rng_full = spark.createDataFrame(
             _compose_local(by_pred[RDFS_RANGE]), "prop string, cls string"
         )
+        return sp_plus, sc_plus, dom_full, rng_full, sp_pairs
+
+    out, (src,) = fastpath.try_local(
+        [src.filter(F.col("p").isin(*schema_preds)).select("s", "p", "o")],
+        local)
+    if out is not None:
+        sp_plus, sc_plus, dom_full, rng_full, sp_local = out
     else:
         sc_edges = src.filter(F.col("p") == RDFS_SUBCLASSOF).select(
             F.col("s").alias("sub"), F.col("o").alias("sup")
@@ -676,22 +674,22 @@ def owl_property_closure(
         base_res.join(F.broadcast(trans), base_res["p"] == F.col("_prop"))
         .select(*edge_cols)
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    new_edges = None
-    head = edges_lazy.limit(_SCHEMA_COLLECT_MAX + 1).collect()
-    if len(head) <= _SCHEMA_COLLECT_MAX:
+
+    def local(head):
         new_rows = _transitive_step_local(
             [tuple(r) for r in head], kind_cols, max_iter
         )
-        if new_rows is not None:
-            from rdf_spark.ops.graph import _sorted_rows
+        if new_rows is None:
+            return None
+        from rdf_spark.ops.graph import _sorted_rows
 
-            new_edges = triples.sparkSession.createDataFrame(
-                _sorted_rows(new_rows), edges_lazy.schema,
-            )
+        return triples.sparkSession.createDataFrame(
+            _sorted_rows(new_rows), edges_lazy.schema,
+        )
+
+    new_edges, (edges,) = fastpath.try_local([edges_lazy], local)
     if new_edges is None:
-        edges = edges_lazy
         closure = edges
         n = closure.count()
         for _ in range(max_iter):

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdf_spark.ops import fastpath
+
 
 def deterministic_walks(
     edges: DataFrame,
@@ -56,9 +58,11 @@ def deterministic_walks(
         [c] = starts.columns
         starts = starts.select(F.col(c).cast("string").alias("start"))
 
-    local = _walks_local(edges.sparkSession, e, starts, walk_len, n_walks)
-    if local is not None:
-        return local
+    out, (e, starts) = fastpath.try_local(
+        [e, starts], lambda ehead, shead: _walks_local(
+            edges.sparkSession, ehead, shead, walk_len, n_walks))
+    if out is not None:
+        return out
 
     frontier = starts.select(
         "start",
@@ -97,26 +101,20 @@ def deterministic_walks(
     return out.select("start", "walk", "step", "node")
 
 
-#: driver fast-path caps (cf. ops.graph._COMPONENT_COLLECT_MAX)
-_WALK_COLLECT_MAX = 200_000
+#: output bound of the driver replica, in walk rows (its inputs are
+#: probed by ops.fastpath)
 _WALK_ROWS_MAX = 2_000_000
 
 
-def _walks_local(spark, e: DataFrame, starts: DataFrame,
-                 walk_len: int, n_walks: int):
+def _walks_local(spark, ehead, shead, walk_len: int, n_walks: int):
     """Driver replica of the per-step md5 lottery (hashlib.md5 of the
     same ``start|walk|t|v`` string, winner = min (hex, v) — identical
-    to the distributed ``min(struct(md5, dst))``), or None past the
-    caps.  Null start nodes dead-end at step 0 exactly like the
-    null-key join."""
+    to the distributed ``min(struct(md5, dst))``) over the collected
+    edges and start rows, or None past ``_WALK_ROWS_MAX``.  Null start
+    nodes dead-end at step 0 exactly like the null-key join."""
     import hashlib
 
-    ehead = e.limit(_WALK_COLLECT_MAX + 1).collect()
-    if len(ehead) > _WALK_COLLECT_MAX:
-        return None
-    shead = starts.limit(_WALK_COLLECT_MAX + 1).collect()
-    if (len(shead) > _WALK_COLLECT_MAX
-            or len(shead) * n_walks * walk_len > _WALK_ROWS_MAX):
+    if len(shead) * n_walks * walk_len > _WALK_ROWS_MAX:
         return None
     adj: dict = {}
     for r in ehead:

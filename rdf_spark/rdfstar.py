@@ -160,13 +160,16 @@ def _statement_sers(
             ),
         ).withColumn("res", res)
 
+    # a round reads the previous one three times (its rows and the
+    # subject / object serializations): localCheckpoint per round keeps
+    # the plan O(1) instead of 3^max_depth copies of the input's
     nulls = F.lit(None)
     cur = ser_round(
         stmts.withColumn("_sub_ser", nulls.cast("string"))
         .withColumn("_obj_ser", nulls.cast("string"))
         .withColumn("_sub_res", nulls.cast("boolean"))
         .withColumn("_obj_res", nulls.cast("boolean"))
-    )
+    ).localCheckpoint(eager=True)
     for _ in range(max(0, max_depth - 1)):
         sers = cur.select(
             F.col("node").alias("_n"),
@@ -190,7 +193,7 @@ def _statement_sers(
                 & (F.col("qo_kind") != KIND_LITERAL),
                 "left",
             ).drop("_n")
-        )
+        ).localCheckpoint(eager=True)
     # an UNRESOLVED node (nesting deeper than max_depth) is not folded —
     # it and everything above it stay fully reified (lossless)
     return cur.filter(F.col("res")).select("node", "ser")

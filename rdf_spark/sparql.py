@@ -170,6 +170,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.ops.graph import META_COLS, bgp_match
 from rdf_spark.terms import (
     KIND_BLANK,
@@ -885,11 +886,13 @@ class _Parser:
             return
         if tag == "alt":
             kids = node[1]
-            if all(k[0] == "pred" for k in kids):
-                g.patterns.append((s, tuple(k[1] for k in kids), o))
-                return
-            if all(k[0] == "ipred" for k in kids):
-                g.patterns.append((o, tuple(k[1] for k in kids), s))
+            tags = {k[0] for k in kids}
+            preds = tuple(k[1] for k in kids)
+            # an IN-list pattern; a repeated predicate is a repeated bag
+            # branch (§18.4) and takes the generic (union) evaluator
+            if tags in ({"pred"}, {"ipred"}) and len(set(preds)) == len(preds):
+                g.patterns.append(
+                    (s, preds, o) if tags == {"pred"} else (o, preds, s))
                 return
         elif tag == "seq":
             if all(k[0] in self._PATH_ATOMS for k in node[1]):
@@ -1695,7 +1698,7 @@ def _graph_nodes(triples: DataFrame) -> DataFrame:
 
 def _reach_from(edges: DataFrame, start: str) -> DataFrame:
     """Nodes reachable from ``start`` by ≥1 edge of the ``(_src, _dst)``
-    pair set.  A small edge set (≤ _CLOSURE_COLLECT_MAX distinct pairs)
+    pair set.  A small distinct edge set (:mod:`rdf_spark.ops.fastpath`)
     is collected once and BFS'd in-process — the per-round
     localCheckpoint+count scheduling dominated anchored-closure queries;
     the output is bounded by the node count, so no output cap is needed.
@@ -1703,8 +1706,8 @@ def _reach_from(edges: DataFrame, start: str) -> DataFrame:
     per-round localCheckpoint, same shape as ops.graph.k_hop_neighbors.
     Local traversal mirrors SQL join semantics: a null node joins
     nothing downstream (reached, never expanded)."""
-    head = edges.distinct().limit(_CLOSURE_COLLECT_MAX + 1).collect()
-    if len(head) <= _CLOSURE_COLLECT_MAX:
+
+    def local(head):
         adj: dict = {}
         for r in head:
             adj.setdefault(r[0], set()).add(r[1])
@@ -1724,6 +1727,10 @@ def _reach_from(edges: DataFrame, start: str) -> DataFrame:
             sorted(((v,) for v in seen), key=lambda t: t[0] or ""),
             "node string",
         )
+
+    out, (edges,) = fastpath.try_local([edges.distinct()], local)
+    if out is not None:
+        return out
     frontier = (
         edges.filter(F.col("_src") == start)
         .select(F.col("_dst").alias("node"))
@@ -1758,25 +1765,18 @@ def _reach_plus(triples: DataFrame, pred: str, start: str,
     return _reach_from(edges, start)
 
 
-#: driver fast-path caps for _closure_pairs: a subgraph whose DISTINCT
-#: edge set fits the input cap is closed in-process (one collect instead
-#: of O(log diameter) shuffle+checkpoint rounds — the per-round
-#: scheduling dominated small-closure queries); a closure whose PAIR SET
-#: outgrows the output cap falls back to the distributed squaring, which
-#: spills and parallelizes.  Both caps are input-derived every run.
-_CLOSURE_COLLECT_MAX = 200_000
+#: output cap of the driver closure in _closure_pairs: a closure whose
+#: PAIR SET outgrows it falls back to the distributed squaring, which
+#: spills and parallelizes
 _CLOSURE_LOCAL_MAX_OUT = 500_000
 
 
-class _ClosureTooLarge(Exception):
-    pass
-
-
-def _closure_pairs_local(pairs: list[tuple]) -> set:
+def _closure_pairs_local(pairs: list[tuple]) -> set | None:
     """In-process reachability closure matching the distributed
     semantics exactly: original pairs kept (nulls included), traversal
     never continues THROUGH a null node (SQL equality joins never match
-    null), cycles yield their (a, a) pairs."""
+    null), cycles yield their (a, a) pairs.  None past
+    ``_CLOSURE_LOCAL_MAX_OUT`` pairs."""
     adj: dict = {}
     for a, b in pairs:
         adj.setdefault(a, set()).add(b)
@@ -1796,7 +1796,7 @@ def _closure_pairs_local(pairs: list[tuple]) -> set:
                 stack.extend(nxt)
         out.update((start, y) for y in seen)
         if len(out) > _CLOSURE_LOCAL_MAX_OUT:
-            raise _ClosureTooLarge
+            return None
     return out
 
 
@@ -1806,27 +1806,27 @@ def _closure_pairs(edges: DataFrame) -> DataFrame:
     it is worst-case quadratic in the subgraph's node count — the cost
     of an unanchored closure query, not of this algorithm.
 
-    Small subgraphs (≤ ``_CLOSURE_COLLECT_MAX`` distinct edges, closure
-    ≤ ``_CLOSURE_LOCAL_MAX_OUT`` pairs) are closed on the driver — one
-    guarded collect replaces O(log diameter) self-join rounds whose
-    per-round localCheckpoint+count scheduling dominated the wall.
-    Anything bigger uses iterative squaring: R ← R ∪ R∘R doubles the
-    reachable path length per round (O(log diameter) rounds vs
-    O(diameter) for edge-at-a-time semi-naive iteration); per-round
+    Small subgraphs (distinct edges within :mod:`rdf_spark.ops.fastpath`'s
+    cap, closure ≤ ``_CLOSURE_LOCAL_MAX_OUT`` pairs) are closed on the
+    driver — one guarded collect replaces O(log diameter) self-join
+    rounds whose per-round localCheckpoint+count scheduling dominated
+    the wall.  Anything bigger uses iterative squaring: R ← R ∪ R∘R
+    doubles the reachable path length per round (O(log diameter) rounds
+    vs O(diameter) for edge-at-a-time semi-naive iteration); per-round
     localCheckpoint truncates lineage."""
-    distinct = edges.distinct()
-    head = distinct.limit(_CLOSURE_COLLECT_MAX + 1).collect()
-    if len(head) <= _CLOSURE_COLLECT_MAX:
-        try:
-            closed = _closure_pairs_local([(r[0], r[1]) for r in head])
-        except _ClosureTooLarge:
-            pass
-        else:
-            return edges.sparkSession.createDataFrame(
-                sorted(closed, key=lambda t: (t[0] or "", t[1] or "")),
-                "_src string, _dst string",
-            )
-    result = distinct.localCheckpoint(eager=True)
+
+    def local(head):
+        closed = _closure_pairs_local([(r[0], r[1]) for r in head])
+        if closed is None:
+            return None
+        return edges.sparkSession.createDataFrame(
+            sorted(closed, key=lambda t: (t[0] or "", t[1] or "")),
+            "_src string, _dst string",
+        )
+
+    out, (result,) = fastpath.try_local([edges.distinct()], local)
+    if out is not None:
+        return out
     n = result.count()
     for _ in range(_PATH_MAX_ITER):
         if n == 0:
@@ -1868,15 +1868,15 @@ def _path_edges(triples: DataFrame, node: tuple) -> DataFrame:
         )
     if tag == "alt":
         kids = node[1]
-        # uniform predicate alternation → ONE IN-list scan, no union
-        if all(k[0] == "pred" for k in kids):
-            return triples.filter(
-                F.col("p").isin([k[1] for k in kids])
-            ).select(F.col("s").alias("_src"), F.col("o").alias("_dst"))
-        if all(k[0] == "ipred" for k in kids):
-            return triples.filter(
-                F.col("p").isin([k[1] for k in kids])
-            ).select(F.col("o").alias("_src"), F.col("s").alias("_dst"))
+        # uniform predicate alternation → ONE IN-list scan, no union; a
+        # repeated predicate is a repeated bag branch (§18.4), which an
+        # IN-list would collapse, so it keeps the union below
+        tags = {k[0] for k in kids}
+        preds = [k[1] for k in kids]
+        if tags in ({"pred"}, {"ipred"}) and len(set(preds)) == len(preds):
+            src, dst = ("s", "o") if tags == {"pred"} else ("o", "s")
+            return triples.filter(F.col("p").isin(preds)).select(
+                F.col(src).alias("_src"), F.col(dst).alias("_dst"))
         out = _path_edges(triples, kids[0])
         for k in kids[1:]:
             out = out.unionByName(_path_edges(triples, k))

@@ -90,8 +90,18 @@ class ParquetBucketStore:
 
     def bucket_counts(self, spark: SparkSession, shard: int) -> DataFrame:
         """(bucket, n, links) per store bucket — the per-partition lineage
-        counters the manifest records (north rule auditability)."""
-        return self.read_triples(spark, shard).groupBy("bucket").agg(
+        counters the manifest records (north rule auditability).  A
+        shard with no triples writes no bucket partition, hence no file
+        to read a schema from: it has no buckets."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            triples = self.read_triples(spark, shard)
+        except AnalysisException as e:
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            return spark.createDataFrame([], "bucket int, n long, links long")
+        return triples.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("p") == _LINK_PRED).cast("long")).alias("links"),
         )

@@ -168,8 +168,7 @@ class TestBpe:
         assert got_py != set() and got_py == got_jvm
 
 
-def test_train_local_matches_distributed(spark, monkeypatch):
-    import rdf_spark.ops.bpe as bpemod
+def test_train_local_matches_distributed(spark, set_fastpath_cap):
     from rdf_spark.ops.bpe import train_bpe
 
     docs = spark.createDataFrame(
@@ -179,6 +178,6 @@ def test_train_local_matches_distributed(spark, monkeypatch):
         "doc_id long, text string",
     )
     fast = train_bpe(docs, n_merges=9)
-    monkeypatch.setattr(bpemod, "_VOCAB_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = train_bpe(docs, n_merges=9)
     assert fast == slow and len(fast) == 9

@@ -99,6 +99,28 @@ def test_query_matches_oracle(spark, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
+#: oracled keys whose operators take a driver fast path (ops.fastpath):
+#: test_query_matches_oracle checks them at the default cap (driver
+#: replicas); this list runs again at cap 0, so the distributed
+#: fallbacks are checked against DuckDB too, not only against the
+#: replicas
+FASTPATH_KEYS = [
+    "bpe_train", "corpus_curate", "dedup_clusters", "graph_walks", "hits",
+    "k_core", "k_truss", "label_propagation", "link_predict", "owl_closure",
+    "pagerank", "personalized_pagerank", "rdf_lists", "rdfs_closure",
+    "sameas_resolve", "scc", "shortest_paths", "sparql_path",
+    "sparql_path_graph", "sparql_path_in_blocks", "sparql_path_unanchored",
+    "triangle_count",
+]
+
+
+@pytest.mark.parametrize("name", FASTPATH_KEYS)
+def test_fastpath_query_matches_oracle(spark, name, set_fastpath_cap):
+    assert name in ORACLED
+    set_fastpath_cap(0)
+    test_query_matches_oracle(spark, name)
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries_run(spark, name):
     df = entry.queries()[name](spark, SF_DIR)

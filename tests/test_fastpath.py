@@ -1,0 +1,169 @@
+"""ops.fastpath: the one driver fast-path helper — checkpoint reuse,
+bail-out, checkpoint release, and the rule that no operator probes its
+input by hand."""
+
+import pathlib
+import re
+
+import pytest
+
+from pyspark.sql import functions as F
+
+from rdf_spark import sparql
+from rdf_spark.ops import bpe, dedup, fastpath, graph, rdflist, reasoning, walks
+from rdf_spark.ops.planutil import plan_has
+from rdf_spark.terms import RDF_NS
+
+RDFS = "http://www.w3.org/2000/01/rdf-schema#"
+OWL_TRANSITIVE = "http://www.w3.org/2002/07/owl#TransitiveProperty"
+
+
+def _persisted_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _edges(spark, ddl="a string, b string"):
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+             ("e", "c"), ("b", "d"), ("x", "y"), ("y", "y")]
+    return spark.createDataFrame(pairs, ddl)
+
+
+def _helper_users(spark):
+    """One small local-path call per operator that uses the helper."""
+    e = _edges(spark)
+    d = _edges(spark, "src string, dst string")
+    w = spark.createDataFrame(
+        [("a", "b", 2), ("b", "c", 1), ("a", "c", 5)],
+        "src string, dst string, w long")
+    srcs = spark.createDataFrame([("a",)], "s string")
+    trip = spark.createDataFrame(
+        [("u:a", "u:p", "u:b", 1, None, None),
+         ("u:b", "u:p", "u:c", 1, None, None),
+         ("u:p", RDFS + "subPropertyOf", "u:q", 1, None, None),
+         ("u:q", RDFS + "domain", "u:C", 1, None, None),
+         ("u:p", RDF_NS + "type", OWL_TRANSITIVE, 1, None, None),
+         ("u:l", RDF_NS + "first", "1", 2, None, None),
+         ("u:l", RDF_NS + "rest", RDF_NS + "nil", 1, None, None)],
+        "s string, p string, o string, o_kind int, o_datatype string, "
+        "o_lang string")
+    pe = trip.filter(F.col("p") == "u:p").select(
+        F.col("s").alias("_src"), F.col("o").alias("_dst"))
+    sub = trip.filter(F.col("p") == RDFS + "subPropertyOf").select(
+        F.col("s").alias("sub"), F.col("o").alias("sup"))
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest"), (2, "new newer newest"),
+         (3, "low lower lowest"), (4, "unrelated words here")],
+        "doc_id long, text string")
+    return {
+        "connected_components_star": lambda: graph.connected_components_star(e),
+        "connected_components": lambda: graph.connected_components(e),
+        "pagerank": lambda: graph.pagerank(d),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(d, ["a"]),
+        "hits": lambda: graph.hits(d),
+        "triangle_count": lambda: graph.triangle_count(e),
+        "k_truss": lambda: graph.k_truss(e, k=3),
+        "k_core": lambda: graph.k_core(e, k=2),
+        "label_propagation": lambda: graph.label_propagation(e),
+        "link_predict": lambda: graph.link_predict(e),
+        "strongly_connected_components":
+            lambda: graph.strongly_connected_components(d),
+        "shortest_paths":
+            lambda: graph.shortest_paths(w, srcs, weight_col="w"),
+        "sparql._reach_from": lambda: sparql._reach_from(pe, "u:a"),
+        "sparql._closure_pairs": lambda: sparql._closure_pairs(pe),
+        "reasoning._schema_closure": lambda: reasoning._schema_closure(sub),
+        "rdfs_closure": lambda: reasoning.rdfs_closure(trip),
+        "owl_property_closure": lambda: reasoning.owl_property_closure(trip),
+        "rdf_lists": lambda: rdflist.rdf_lists(trip),
+        "train_bpe": lambda: bpe.train_bpe(docs, n_merges=3),
+        "deterministic_walks":
+            lambda: walks.deterministic_walks(d, walk_len=3),
+        "near_dup_clusters":
+            lambda: dedup.near_dup_clusters(docs, threshold=0.9),
+    }
+
+
+def test_local_path_releases_probe_checkpoint(spark):
+    """A long-lived session must not accumulate the probe checkpoints
+    of local-path calls; the returned frame stays readable."""
+    for name, call in _helper_users(spark).items():
+        before = _persisted_ids(spark)
+        out = call()
+        assert _persisted_ids(spark) - before == set(), name
+        if not isinstance(out, list):
+            out.collect()
+
+
+def test_bail_keeps_checkpoint_for_fallback(spark):
+    """A replica that returns None leaves the probe's checkpoint to the
+    distributed path, still readable (never released on a bail)."""
+    df = spark.range(50).select((F.col("id") % 7).alias("k")).distinct()
+    out, (ck,) = fastpath.try_local([df], lambda head: None)
+    assert out is None
+    assert ck._jdf.queryExecution().analyzed().getClass().getSimpleName() \
+        == "LogicalRDD"
+    assert sorted(r.k for r in ck.collect()) == list(range(7))
+
+
+def test_scan_plans_are_not_checkpointed(spark):
+    """A plain projection has nothing to re-run: probed lazily."""
+    df = spark.range(10).select((F.col("id") * 2).alias("x"))
+    assert not plan_has(df, fastpath._RESCAN_NODES)
+    assert plan_has(df.distinct(), fastpath._RESCAN_NODES)
+    out, (same,) = fastpath.try_local([df], lambda head: len(head))
+    assert out == 10 and same is df
+
+
+def test_factor_scales_the_cap(spark, set_fastpath_cap):
+    set_fastpath_cap(3)
+    df = spark.range(5).toDF("x")
+    assert fastpath.try_local([df], len, factors=(2,))[0] == 5
+    assert fastpath.try_local([df], len)[0] is None
+
+
+def _sql_executions(spark) -> dict:
+    """executionId -> physical plan of the session's SQL executions."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+    }
+
+
+@pytest.mark.parametrize("fn", ["_closure_pairs", "_reach_from"])
+def test_sparql_closure_fallback_dedups_once(spark, set_fastpath_cap, fn):
+    """At cap 0 the over-cap fallback reuses the probe's checkpoint: the
+    dedup Exchange over the input runs once, not once for the probe and
+    again for the fallback."""
+    set_fastpath_cap(0)
+    # a 5-cycle, every edge twice: the dedup has work to do
+    edges = spark.range(10).select(
+        (F.col("id") % 5).cast("string").alias("_src"),
+        ((F.col("id") + 1) % 5).cast("string").alias("_dst"))
+    before = set(_sql_executions(spark))
+    if fn == "_closure_pairs":
+        out = sparql._closure_pairs(edges)
+        expect = 5 * 5
+    else:
+        out = sparql._reach_from(edges, "0")
+        expect = 5
+    assert out.count() == expect
+    # executions that shuffle the raw Range input (its dedup)
+    new = [plan for i, plan in _sql_executions(spark).items()
+           if i not in before]
+    assert sum("Range" in p and "Exchange" in p for p in new) == 1
+
+
+def test_no_hand_rolled_probe_outside_fastpath():
+    """Every driver fast path goes through ops.fastpath.try_local."""
+    root = pathlib.Path(fastpath.__file__).resolve().parents[1]
+    # also across a line break: ``.limit(cap + 1)\n.collect()``
+    probe = re.compile(r"limit\([^)]*\+ ?1\)\s*\.collect")
+    offenders = [
+        f"{p.relative_to(root)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for p in root.rglob("*.py") if p.name != "fastpath.py"
+        for text in [p.read_text()]
+        for m in probe.finditer(text)
+    ]
+    assert offenders == []

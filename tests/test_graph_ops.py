@@ -230,14 +230,14 @@ def test_connected_components_nonconvergence_raises(spark):
     assert got == {0}
 
 
-def test_connected_components_star_differential(spark, monkeypatch):
+def test_connected_components_star_differential(spark, set_fastpath_cap):
     """large-star/small-star vs the same union-find oracle, plus a long
     chain (diameter ≫ rounds) that label propagation cannot finish.
     Runs the DISTRIBUTED algorithm (cap forced to 0); the driver fast
     path is covered by test_connected_components_fast_path_equivalence."""
     import random
 
-    monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     rng = random.Random(23)
     for trial in range(2):
         n = 150
@@ -264,7 +264,7 @@ def test_connected_components_star_differential(spark, monkeypatch):
     assert comp == {5: 5, 1: 1, 2: 1}
 
 
-def test_iterative_fast_paths_match_distributed(spark, monkeypatch):
+def test_iterative_fast_paths_match_distributed(spark, set_fastpath_cap):
     """Driver replicas of k_core / label_propagation / shortest_paths
     ≡ the distributed round schedules (values AND dtypes)."""
     import random
@@ -288,7 +288,7 @@ def test_iterative_fast_paths_match_distributed(spark, monkeypatch):
         ]
 
     fast = runs()
-    monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = runs()
     assert fast == slow
 
@@ -303,14 +303,14 @@ def test_iterative_fast_paths_match_distributed(spark, monkeypatch):
     sdec = spark.createDataFrame([("a",)], "s string")
     slow_d = {(r.node, r.dist) for r in
               graph.shortest_paths(wdec, sdec, weight_col="w").collect()}
-    monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 200_000)
+    set_fastpath_cap(None)
     fast_d = {(r.node, r.dist) for r in
               graph.shortest_paths(wdec, sdec, weight_col="w").collect()}
     assert fast_d == slow_d == {("a", Decimal("0")), ("b", Decimal("0.5")),
                                 ("c", Decimal("0.75"))}
 
 
-def test_connected_components_fast_path_equivalence(spark, monkeypatch):
+def test_connected_components_fast_path_equivalence(spark, set_fastpath_cap):
     """Driver fast path ≡ distributed path for both CC variants, on a
     random graph plus the edge cases the SQL semantics make tricky:
     self-loops, null endpoints, and singleton coverage."""
@@ -329,10 +329,10 @@ def test_connected_components_fast_path_equivalence(spark, monkeypatch):
                    graph.connected_components):
             fast = fn(df)
             fast_rows = {(r[0], r[1]) for r in fast.collect()}
-            monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+            set_fastpath_cap(0)
             slow = fn(df)
             slow_rows = {(r[0], r[1]) for r in slow.collect()}
-            monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 200_000)
+            set_fastpath_cap(None)
             assert fast_rows == slow_rows, (ddl, fn.__name__)
             assert [f.dataType for f in fast.schema.fields] == \
                 [f.dataType for f in slow.schema.fields], (ddl, fn.__name__)
@@ -521,7 +521,7 @@ def test_kg_construct_job_link_scc(spark, tmp_path):
                    "c.example": "c.example"}
 
 
-def test_rank_fast_paths_match_distributed(spark, monkeypatch):
+def test_rank_fast_paths_match_distributed(spark, set_fastpath_cap):
     """pagerank / personalized_pagerank / hits driver replicas must be
     BIT-identical to the distributed decimal-exact schedules."""
     import random
@@ -540,12 +540,12 @@ def test_rank_fast_paths_match_distributed(spark, monkeypatch):
         ]
 
     fast = runs()
-    monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = runs()
     assert fast == slow
 
 
-def test_hits_null_endpoints_match_distributed(spark, monkeypatch):
+def test_hits_null_endpoints_match_distributed(spark, set_fastpath_cap):
     """A null endpoint's contribution joins the null GROUP (it inflates
     the L1 total) but never a node row, and the final inner joins drop
     the null node — the local replica must reproduce all three."""
@@ -553,20 +553,20 @@ def test_hits_null_endpoints_match_distributed(spark, monkeypatch):
         [("a", "b"), ("a", None), (None, "b"), ("b", "a")],
         "src string, dst string")
     fast = sorted(tuple(r) for r in graph.hits(df).collect())
-    monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = sorted(tuple(r) for r in graph.hits(df).collect())
     assert fast == slow
     assert {r[0] for r in fast} == {"a", "b"}
 
 
-def test_hits_all_null_side_matches_distributed(spark, monkeypatch):
+def test_hits_all_null_side_matches_distributed(spark, set_fastpath_cap):
     """All-null-src (and all-null-dst) edge slices: the distributed
     plan yields null scores; the replica must propagate them instead of
     crashing on Decimal(repr(None))."""
     for rows in ([(None, "b")], [("a", None), ("c", None)]):
         df = spark.createDataFrame(rows, "src string, dst string")
         fast = sorted(tuple(r) for r in graph.hits(df, n_iter=2).collect())
-        monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 0)
+        set_fastpath_cap(0)
         slow = sorted(tuple(r) for r in graph.hits(df, n_iter=2).collect())
-        monkeypatch.setattr(graph, "_COMPONENT_COLLECT_MAX", 200_000)
+        set_fastpath_cap(None)
         assert fast == slow, rows

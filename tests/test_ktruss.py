@@ -80,10 +80,8 @@ class TestKTruss:
         assert got == {"a": 1, "b": 1, "c": 1, "d": 0}
 
 
-def test_ktruss_local_matches_distributed(spark, monkeypatch):
+def test_ktruss_local_matches_distributed(spark, set_fastpath_cap):
     import random
-
-    from rdf_spark.ops import graph as graphmod
 
     rng = random.Random(3)
     nodes = [f"n{i}" for i in range(12)]
@@ -95,7 +93,7 @@ def test_ktruss_local_matches_distributed(spark, monkeypatch):
     e = _edges(spark, pairs)
     for k in (3, 4, 5):
         fast = _got(k_truss(e, k=k))
-        monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", 0)
+        set_fastpath_cap(0)
         slow = _got(k_truss(e, k=k))
-        monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", 200_000)
+        set_fastpath_cap(None)
         assert fast == slow, k

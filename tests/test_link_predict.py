@@ -98,10 +98,10 @@ class TestLinkPredict:
                 _naive(pairs, max_degree=md, min_common=mc), (md, mc)
 
 
-def test_link_predict_and_triangles_local_match_distributed(spark, monkeypatch):
+def test_link_predict_and_triangles_local_match_distributed(
+        spark, set_fastpath_cap):
     import random
 
-    from rdf_spark.ops import graph as graphmod
     from rdf_spark.ops.graph import link_predict, triangle_count
 
     rng = random.Random(17)
@@ -120,6 +120,6 @@ def test_link_predict_and_triangles_local_match_distributed(spark, monkeypatch):
         ]
 
     fast = runs()
-    monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = runs()
     assert fast == slow

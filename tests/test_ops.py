@@ -883,9 +883,10 @@ def test_ivf_pq_parameter_validation(spark, embeddings):
         ann.train_pq_codebooks(embeddings, dim=64, m=8, n_codes=512)
 
 
-def test_near_dup_clusters_cc_paths_equivalent(spark, documents):
-    """Round-5: the driver union-find shortcut (small pair graphs) and
-    the distributed CC must produce identical clusters."""
+def test_near_dup_clusters_cc_paths_equivalent(spark, documents,
+                                               set_fastpath_cap):
+    """The driver union-find (small pair graphs) and the distributed CC
+    must produce identical clusters."""
     d = documents.select("doc_id", "text").limit(200)
     dup = d.filter(F.col("doc_id") < 8).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
@@ -893,8 +894,9 @@ def test_near_dup_clusters_cc_paths_equivalent(spark, documents):
     both = d.unionByName(dup)
     small = {(r.doc_id, r.cluster) for r in dedup.near_dup_clusters(
         both, threshold=0.9).collect()}
+    set_fastpath_cap(0)
     dist = {(r.doc_id, r.cluster) for r in dedup.near_dup_clusters(
-        both, threshold=0.9, cc_collect_max=0).collect()}
+        both, threshold=0.9).collect()}
     assert small == dist
     assert any(c != i for i, c in small)  # planted dups actually cluster
 

@@ -139,10 +139,8 @@ class TestOwlPropertyClosure:
         assert got == _naive(trs), seed
 
 
-def test_instance_closure_local_matches_distributed(spark, monkeypatch):
+def test_instance_closure_local_matches_distributed(spark, set_fastpath_cap):
     import random
-
-    import rdf_spark.ops.reasoning as rmod
 
     rng = random.Random(41)
     preds = [f"u:p{i}" for i in range(3)]
@@ -152,22 +150,21 @@ def test_instance_closure_local_matches_distributed(spark, monkeypatch):
     for _ in range(25):
         trs.add((rng.choice(nodes), rng.choice(preds), rng.choice(nodes)))
     fast = _got(owl_property_closure(_df(spark, trs)))
-    monkeypatch.setattr(rmod, "_SCHEMA_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = _got(owl_property_closure(_df(spark, trs)))
     assert fast == slow
 
 
-def test_instance_closure_single_kind_column(spark, monkeypatch):
+def test_instance_closure_single_kind_column(spark, set_fastpath_cap):
     """o_kind-only (and s_kind-only) inputs must close identically on
     both paths — the local replica indexes kind positions per column."""
-    import rdf_spark.ops.reasoning as rmod
 
     rows = [("u:p0", RDF_TYPE, OWL_TRANSITIVE, 1),
             ("u:a", "u:p0", "u:b", 1), ("u:b", "u:p0", "u:c", 1)]
     df = spark.createDataFrame(
         rows, "s string, p string, o string, o_kind int")
     fast = _got(owl_property_closure(df))
-    monkeypatch.setattr(rmod, "_SCHEMA_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = _got(owl_property_closure(df))
     assert fast == slow
     assert ("u:a", "u:p0", "u:c") in {t[:3] for t in fast}

@@ -455,6 +455,29 @@ def test_manifest_per_bucket_counters(spark, tmp_path):
     )
 
 
+def test_empty_shard_writes_zero_manifest(spark, tmp_path):
+    """A shard that receives no pages writes no bucket partitions; its
+    manifest must still record zero counts (and resume must skip it)."""
+    out = str(tmp_path / "kg_empty_shard")
+    pages = datagen.pages(spark, 1, 7)
+    results = pipeline.run_pipeline(
+        spark, pages, datagen.aliases(spark), out, n_shards=4, n_buckets=4,
+    )
+    assert len(results) == 4
+    assert sum(r.n_pages for r in results) == 1
+    empty = [r for r in results if r.n_pages == 0]
+    assert len(empty) == 3
+    for r in empty:
+        assert r.n_triples_final == r.n_rdf_triples == r.n_link_triples == 0
+        man = json.load(open(os.path.join(out, "_manifest",
+                                          f"shard-{r.shard}.json")))
+        assert man["n_triples_final"] == 0 and man["buckets"] == {}
+    again = pipeline.run_pipeline(
+        spark, pages, datagen.aliases(spark), out, n_shards=4, n_buckets=4,
+    )
+    assert all(r.skipped for r in again)
+
+
 def test_salted_join_matches_plain_join(spark):
     """salt-and-replicate join must be exactly equivalent to a plain join
     on a hot-keyed input (deterministic salts, no lost or doubled rows)."""

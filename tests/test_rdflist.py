@@ -138,11 +138,10 @@ def test_max_len_validation(spark):
         rdf_lists(_df(spark, _chain("x", ["a"])), max_len=0)
 
 
-def test_local_matches_distributed(spark, monkeypatch):
+def test_local_matches_distributed(spark, set_fastpath_cap):
     """Driver fast path ≡ distributed pointer-doubling on a mixed
     fixture: good chains, a cycle, a dangle, multi-first, past-nil
     garbage — full 6-column row sets and stats must agree."""
-    import rdf_spark.ops.rdflist as rl
 
     rows = (
         _chain("ok:", ["a", "b", "c"])
@@ -160,7 +159,7 @@ def test_local_matches_distributed(spark, monkeypatch):
 
     fast = full(rdf_lists(df))
     fast_stats = full(rdf_lists(df, stats=True))
-    monkeypatch.setattr(rl, "_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = full(rdf_lists(df))
     slow_stats = full(rdf_lists(df, stats=True))
     assert fast == slow

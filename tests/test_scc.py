@@ -2,7 +2,6 @@
 vs a Tarjan reference."""
 import pytest
 
-from rdf_spark.ops import graph as graphmod
 from rdf_spark.ops.graph import strongly_connected_components
 
 
@@ -95,10 +94,10 @@ class TestScc:
         got = _got(strongly_connected_components(_edges(spark, pairs)))
         assert got == {f"p{i}": f"p{i}" for i in range(6)}
 
-    def test_phase_bound_raises(self, spark, monkeypatch):
+    def test_phase_bound_raises(self, spark, set_fastpath_cap):
         # the phase bound is a distributed-runaway guard: force the
         # distributed path (the driver fast path has no peel loop)
-        monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", 0)
+        set_fastpath_cap(0)
         pairs = [(f"p{i}", f"p{i+1}") for i in range(4)]
         with pytest.raises(RuntimeError):
             strongly_connected_components(_edges(spark, pairs),
@@ -108,11 +107,10 @@ class TestScc:
     # default cap exercises the driver fast path — both must match Tarjan
     @pytest.mark.parametrize("seed", range(4))
     @pytest.mark.parametrize("cap", [0, None])
-    def test_matches_tarjan_random(self, spark, seed, cap, monkeypatch):
+    def test_matches_tarjan_random(self, spark, seed, cap, set_fastpath_cap):
         import random
 
-        if cap is not None:
-            monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", cap)
+        set_fastpath_cap(cap)
         rng = random.Random(seed * 7 + 1)
         nodes = [f"n{i}" for i in range(10)]
         pairs = list({(rng.choice(nodes), rng.choice(nodes))
@@ -130,9 +128,9 @@ class TestScc:
             strongly_connected_components(df)
 
     def test_local_matches_distributed_with_self_loops(self, spark,
-                                                       monkeypatch):
+                                                       set_fastpath_cap):
         pairs = [("a", "b"), ("b", "a"), ("c", "c"), ("c", "d")]
         fast = _got(strongly_connected_components(_edges(spark, pairs)))
-        monkeypatch.setattr(graphmod, "_COMPONENT_COLLECT_MAX", 0)
+        set_fastpath_cap(0)
         slow = _got(strongly_connected_components(_edges(spark, pairs)))
         assert fast == slow == {"a": "a", "b": "a", "c": "c", "d": "d"}

@@ -1060,6 +1060,14 @@ def test_path_alternation(tri):
         SELECT ?v WHERE { ?s <urn:knows>/<urn:name> ?v }
     """))
     assert got == [("Ann",), ("Bob",)]
+    # a repeated branch is a repeated bag branch (§18.4): every solution
+    # twice, at the top level and inside a sequence hop
+    got = _run(tri, "SELECT ?c ?v WHERE { ?c <urn:name>|<urn:name> ?v }")
+    assert len(got) == 6 and len(set(got)) == 3
+    got = sorted(_run(tri, """
+        SELECT ?v WHERE { ?s <urn:knows>/(^<urn:knows>|^<urn:knows>) ?v }
+    """))
+    assert got == [("urn:c1",), ("urn:c1",), ("urn:c2",), ("urn:c2",)]
 
 
 def test_path_composition_errors(tri):

@@ -96,8 +96,8 @@ def test_path_compiler_matches_naive_evaluator(spark, rng):
         assert got == want, f"case {case}: path {path!r}\n{got}\nvs\n{want}"
 
 
-def test_closure_matches_bfs(spark, rng):
-    for case in range(8):
+def test_closure_matches_bfs(spark, rng, cases=8):
+    for case in range(cases):
         triples = _random_graph(rng, rng.randint(10, 25))
         df = spark.createDataFrame(triples, "s string, p string, o string")
         pred = rng.choice(PREDS)
@@ -195,8 +195,8 @@ def _random_path(rng, depth):
     return ("closure", _random_path(rng, depth - 1), rng.choice("+*?"))
 
 
-def test_compound_paths_match_naive_evaluator(spark, rng):
-    for case in range(20):
+def test_compound_paths_match_naive_evaluator(spark, rng, cases=20):
+    for case in range(cases):
         triples = _random_graph(rng, rng.randint(8, 20))
         df = spark.createDataFrame(triples, "s string, p string, o string")
         node = _random_path(rng, 2)
@@ -207,8 +207,8 @@ def test_compound_paths_match_naive_evaluator(spark, rng):
         assert got == want, f"case {case}: path {path!r}\n{got}\nvs\n{want}"
 
 
-def test_anchored_compound_paths_match_naive(spark, rng):
-    for case in range(10):
+def test_anchored_compound_paths_match_naive(spark, rng, cases=10):
+    for case in range(cases):
         triples = _random_graph(rng, rng.randint(8, 20))
         df = spark.createDataFrame(triples, "s string, p string, o string")
         node = ("closure", _random_path(rng, 1), rng.choice("+*?"))
@@ -230,8 +230,8 @@ def test_anchored_compound_paths_match_naive(spark, rng):
             f"case {case}: rev {path!r} to {anchor}"
 
 
-def test_cyclic_same_var_path(spark, rng):
-    for case in range(5):
+def test_cyclic_same_var_path(spark, rng, cases=5):
+    for case in range(cases):
         triples = _random_graph(rng, rng.randint(10, 22))
         df = spark.createDataFrame(triples, "s string, p string, o string")
         node = ("closure", ("alt", [("pred", PREDS[0]), ("pred", PREDS[1])]), "+")
@@ -283,3 +283,14 @@ def test_paths_inside_blocks_match_naive(spark, rng):
                 f"MINUS {{ ?a {path} ?b }} }}").collect())
         want3 = sorted(t for t in base if t not in set(pairs))
         assert got3 == want3, f"case {case} MINUS {path!r}"
+
+
+def test_closure_paths_at_fastpath_cap(spark, fastpath_cap):
+    """The closure suites above, fewer cases each, through both paths of
+    the closures' driver fast path (ops.fastpath): the in-process BFS /
+    closure at the default cap, the distributed BFS / iterative squaring
+    at cap 0."""
+    test_closure_matches_bfs(spark, random.Random(7), cases=2)
+    test_compound_paths_match_naive_evaluator(spark, random.Random(8), cases=4)
+    test_anchored_compound_paths_match_naive(spark, random.Random(9), cases=2)
+    test_cyclic_same_var_path(spark, random.Random(10), cases=1)

@@ -100,10 +100,9 @@ class TestWalks:
             deterministic_walks(e, walk_len=2, n_walks=0)
 
 
-def test_walks_local_matches_distributed(spark, monkeypatch):
+def test_walks_local_matches_distributed(spark, set_fastpath_cap):
     import random
 
-    import rdf_spark.ops.walks as walksmod
     from rdf_spark.ops.walks import deterministic_walks
 
     rng = random.Random(9)
@@ -123,6 +122,6 @@ def test_walks_local_matches_distributed(spark, monkeypatch):
         ]
 
     fast = runs()
-    monkeypatch.setattr(walksmod, "_WALK_COLLECT_MAX", 0)
+    set_fastpath_cap(0)
     slow = runs()
     assert fast == slow

@@ -3,9 +3,12 @@
 pandas object-dtype regex is memory-bandwidth-bound and stops scaling at
 ~8 cores on this class of machine; pyarrow's RE2 ``extract_regex`` over
 contiguous string buffers is ~2× faster per core and scales to 32 cores
-(measured: 0.5M lines/s/core, 8.4M lines/s @32 procs).  This module keeps
-the same sound-not-complete contract as rdf_spark.vectorized: any line the
-fast pattern cannot prove safe falls back to the exact tokenizer.
+(measured: 0.5M lines/s/core, 8.4M lines/s @32 procs).  The fast patterns
+are sound, not complete: any line they cannot prove safe (escapes, unusual
+whitespace, syntax errors, quoted triples) falls back to the exact
+per-line tokenizer in rdf_spark.parsing, so this is the one N-Triples /
+N-Quads parser — line scans and whole documents (split into lines by
+:func:`split_lines`) both go through :func:`parse_lines_arrow`.
 
 RE2 reports non-participating groups as empty strings (not nulls), so the
 arrow patterns capture WITH their delimiters — ``<iri>``, ``"lit"``,
@@ -17,13 +20,17 @@ Used via ``DataFrame.mapInArrow`` (see rdf_spark.sources).
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from rdf_spark import parsing, terms, vectorized
+from rdf_spark import parsing, terms
 from rdf_spark.chars import _PN_CHARS_RANGES, _PN_CHARS_U_RANGES
 
-_NO_STMT_PATTERN = vectorized._NO_STMT.pattern
+# Lines that produce no statement: blank / comment-only.
+_NO_STMT_PATTERN = r"^[ \t]*(?:#.*)?\r?$"
 
 _IRI_BODY = r"[A-Za-z][A-Za-z0-9+.\-]*:[^ <>\"{}|^`\\]*"
 _BN_BODY = "_:[%s0-9](?:[%s.]*[%s])?" % (
@@ -87,6 +94,8 @@ QUAD_FIELDS = TRIPLE_FIELDS + [("graph", pa.string()), ("graph_kind", pa.int8())
 
 TRIPLE_SCHEMA = pa.schema(TRIPLE_FIELDS + [("err", pa.string())])
 QUAD_SCHEMA = pa.schema(QUAD_FIELDS + [("err", pa.string())])
+URL_TRIPLE_SCHEMA = pa.schema([("url", pa.string())] + list(TRIPLE_SCHEMA))
+URL_QUAD_SCHEMA = pa.schema([("url", pa.string())] + list(QUAD_SCHEMA))
 
 
 def _i8(x):
@@ -152,6 +161,15 @@ def _match_cols(fast, quads: bool = False, turtle: bool = False) -> dict:
     return cols
 
 
+def split_lines(texts: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """Split each document into its ``\\n``-separated lines → ``(lines,
+    doc_idx)``: the flat line array and, per line, the index of its
+    document.  A null document yields one empty line."""
+    lines_list = pc.split_pattern(pc.fill_null(texts, ""), "\n")
+    doc_idx = pc.list_parent_indices(lines_list).to_numpy(zero_copy_only=False)
+    return pc.list_flatten(lines_list), doc_idx
+
+
 def parse_turtle_docs_arrow(urls: pa.Array, texts: pa.Array):
     """Vectorized fast path for FLAT Turtle documents.
 
@@ -172,17 +190,12 @@ def parse_turtle_docs_arrow(urls: pa.Array, texts: pa.Array):
     holding all triples of the flat documents, plus a boolean numpy mask
     of documents that must go through the exact parser.
     """
-    import numpy as np
-
     if isinstance(urls, pa.ChunkedArray):
         urls = urls.combine_chunks()
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
     n_docs = len(texts)
-    texts_f = pc.fill_null(texts, "")
-    lines_list = pc.split_pattern(texts_f, "\n")
-    lines = pc.list_flatten(lines_list)
-    doc_idx = pc.list_parent_indices(lines_list).to_numpy(zero_copy_only=False)
+    lines, doc_idx = split_lines(texts)
 
     # extract first; the blank/comment check runs only over the
     # non-matching remainder (same reorder as parse_lines_arrow — one
@@ -219,12 +232,26 @@ def parse_turtle_docs_arrow(urls: pa.Array, texts: pa.Array):
     return out, fallback
 
 
-def parse_lines_arrow(lines: pa.Array, fmt: str = "ntriples") -> pa.Table:
+def parse_lines_arrow(lines: pa.Array, fmt: str = "ntriples",
+                      urls: pa.Array | None = None) -> pa.Table:
     """Parse a string array of lines → table in TRIPLE/QUAD_SCHEMA.
 
-    Blank/comment lines are dropped; rows that fail produce err!=null."""
+    Blank/comment lines are dropped; rows that fail produce err!=null
+    (quarantine is per line).  ``urls``, when given, holds each line's
+    document url: the table then starts with a ``url`` column, and a
+    quoted-triple minter (:class:`parsing._QtMinter`) never spans two
+    urls, so a ``_:qt…`` statement node and its four reification rows
+    always carry the same url for the url-keyed skolemizer.  Within one
+    url the minter is per call (per Arrow batch): a fact quoted on many
+    lines of a batch expands its reification rows once, but a document
+    split over several batches repeats them once per batch (identical
+    rows, content-keyed ids — dedup collapses them)."""
     quads = fmt == "nquads"
-    schema = QUAD_SCHEMA if quads else TRIPLE_SCHEMA
+    keyed = urls is not None
+    if keyed:
+        schema = URL_QUAD_SCHEMA if quads else URL_TRIPLE_SCHEMA
+    else:
+        schema = QUAD_SCHEMA if quads else TRIPLE_SCHEMA
     pattern = _NQ_PATTERN if quads else _NT_PATTERN
 
     if isinstance(lines, pa.ChunkedArray):
@@ -247,23 +274,31 @@ def parse_lines_arrow(lines: pa.Array, fmt: str = "ntriples") -> pa.Table:
 
     cols = _match_cols(fast, quads=quads)
     cols["err"] = pa.nulls(n_fast, pa.string())
+    if keyed:
+        cols["url"] = urls if all_fast else pc.filter(urls, is_fast)
     fast_tbl = pa.table([cols[f.name] for f in schema], schema=schema)
 
     if all_fast:
         return fast_tbl
-    rest = pc.filter(lines, pc.invert(is_fast))
-    no_stmt = pc.match_substring_regex(rest, _NO_STMT_PATTERN)
-    slow_lines = pc.filter(rest, pc.invert(no_stmt)).to_pylist()
+    is_slow = pc.invert(is_fast)
+    rest = pc.filter(lines, is_slow)
+    stmt = pc.invert(pc.match_substring_regex(rest, _NO_STMT_PATTERN))
+    slow_lines = pc.filter(rest, stmt).to_pylist()
     if not slow_lines:
         return fast_tbl
+    if keyed:
+        slow_urls = pc.filter(pc.filter(urls, is_slow), stmt).to_pylist()
+    else:
+        slow_urls = [None] * len(slow_lines)
     parse_one = parsing.parse_nquads if quads else parsing.parse_ntriples
-    n_cols = len(schema) - 1
+    n_cols = len(schema) - 1 - keyed
     recs: list[tuple] = []
-    # one quoted-triple minter per BATCH: a fact quoted on many lines
-    # expands its reification once here, not once per line (content-
-    # keyed ids keep cross-batch duplicates identical → dedup collapses)
-    qt_minter = parsing._QtMinter()
-    for line in slow_lines:
+    # one quoted-triple minter per url of the BATCH: a fact quoted on
+    # many lines expands its reification once here, not once per line
+    minters = defaultdict(parsing._QtMinter)
+    for url, line in zip(slow_urls, slow_lines):
+        qt_minter = minters[url]
+        head = (url,) if keyed else ()
         # stage this line's memo additions: a quarantined line's partial
         # parse must not leave statement nodes memoized (their
         # reification rows die with the line — a later clean line
@@ -274,10 +309,10 @@ def parse_lines_arrow(lines: pa.Array, fmt: str = "ntriples") -> pa.Table:
         except parsing.QUARANTINE_ERRORS as e:
             for k in staged:
                 del qt_minter.memo[k]
-            recs.append((None,) * n_cols + (str(e),))
+            recs.append(head + (None,) * n_cols + (str(e),))
             continue
         for r in rows:
-            recs.append(tuple(r) + (None,))
+            recs.append(head + tuple(r) + (None,))
     if not recs:
         return fast_tbl
     slow_tbl = pa.table(

@@ -23,15 +23,29 @@ def read_rdf(spark: SparkSession, path: str, fmt: str, base: str = "",
              errors: str = "quarantine") -> DataFrame:
     """Read RDF file(s) of any supported format into the canonical schema.
 
-    Line formats split at line boundaries (fully parallel); document
-    formats read whole files (one document per file) via binaryFile.
+    Line formats split at line boundaries (fully parallel, quarantined
+    per line); document formats read whole files (one document per file).
     """
-    if fmt not in DECODERS:
-        raise ValueError(f"no decoder for format: {fmt}")
     if fmt == "ntriples":
         return sources.read_ntriples(spark, path, errors=errors)
     if fmt == "nquads":
         return sources.read_nquads(spark, path, errors=errors)
+    return _read_with_url(spark, path, fmt, base, errors).drop("url")
+
+
+def _read_with_url(spark: SparkSession, path: str, fmt: str, base: str,
+                   errors: str) -> DataFrame:
+    """:func:`read_rdf` keeping each row's source file as ``url`` — the
+    document scope of its blank labels.  Line formats read
+    ``spark.read.text`` with ``_metadata.file_path``, the same string as
+    the whole-file reader's ``path``, so skolem IRIs do not depend on the
+    format's reader."""
+    if fmt not in DECODERS:
+        raise ValueError(f"no decoder for format: {fmt}")
+    if fmt in sources.LINE_FORMATS:
+        lines = spark.read.text(path).select(
+            "value", F.col("_metadata.file_path").alias("url"))
+        return sources.parse_lines_df(lines, fmt, errors)
     docs = (
         spark.read.format("binaryFile")
         .load(path)
@@ -42,7 +56,7 @@ def read_rdf(spark: SparkSession, path: str, fmt: str, base: str = "",
     )
     return sources.parse_documents(
         docs, fmt=fmt, base_from_url=not base, base=base, errors=errors
-    ).drop("url")
+    )
 
 
 def _ensure_graph_cols(df: DataFrame) -> DataFrame:
@@ -106,47 +120,28 @@ def convert(spark: SparkSession, in_path: str, in_fmt: str, out_path: str,
     ``skolemize=True`` (default) rewrites blank labels to per-document
     skolem IRIs: blank labels are only unique within one input document
     (rdf.go:497-508), so merging many files without skolemization would
-    collide ``_:b1`` across documents — for line formats this routes
-    through the per-FILE document parser so labels get the correct
-    file scope.  Pass False for single-document conversions that must
-    preserve labels (reference-rdf2rdf behavior; line formats then take
-    the fully line-parallel fast path).
+    collide ``_:b1`` across documents — every format keeps its source
+    file as the document scope (line formats stay line-parallel and
+    quarantine malformed lines one by one).  Pass False for
+    single-document conversions that must preserve labels
+    (reference-rdf2rdf behavior).
     """
     if canonicalize and skolemize:
         raise ValueError(
             "canonicalize rewrites blank labels in place — pass "
             "skolemize=False (--keep-blank-labels)"
         )
-    if in_fmt in ("ntriples", "nquads") and not skolemize \
-            and not canonicalize:
-        # label-preserving fast path: fully line-parallel (the right mode
-        # for single-document conversions, matching rdf2rdf)
-        df = read_rdf(spark, in_path, in_fmt, base=base)
-        good = df.filter(F.col("err").isNull()).drop("err")
-    else:
-        if in_fmt not in DECODERS:
-            raise ValueError(f"no decoder for format: {in_fmt}")
-        docs = (
-            spark.read.format("binaryFile")
-            .load(in_path)
-            .select(
-                F.col("path").alias("url"),
-                F.decode(F.col("content"), "utf-8").alias("text"),
-            )
-        )
-        parsed = sources.parse_documents(
-            docs, fmt=in_fmt, base_from_url=not base, base=base
-        )
-        good = parsed.filter(F.col("err").isNull()).drop("err")
-        if skolemize:
-            from rdf_spark import canonical
+    parsed = _read_with_url(spark, in_path, in_fmt, base, "quarantine")
+    good = parsed.filter(F.col("err").isNull()).drop("err")
+    if skolemize:
+        from rdf_spark import canonical
 
-            good = canonical.skolemize(good)
-        elif canonicalize:
-            from rdf_spark.canon import canonicalize_blank_nodes
+        good = canonical.skolemize(good)
+    elif canonicalize:
+        from rdf_spark.canon import canonicalize_blank_nodes
 
-            good = canonicalize_blank_nodes(good, "url")
-        good = good.drop("url")
+        good = canonicalize_blank_nodes(good, "url")
+    good = good.drop("url")
     if resolve_sameas:
         from rdf_spark.ops.reasoning import sameas_resolve
 

@@ -64,28 +64,33 @@ def build_shard_triples(pages: DataFrame, aliases: DataFrame) -> tuple[DataFrame
     alias_rows = [(r.surface, r.entity_iri, r.prior) for r in aliases.collect()]
     alias_bc = pages.sparkSession.sparkContext.broadcast(alias_rows)
     tagged = extraction.fused_extract_parse_link(pages, alias_bc)
-    quarantine = tagged.filter(F.col("err").isNotNull()).select("url", "err")
-    all_triples = tagged.filter(F.col("err").isNull()).drop("err")
     # NOTE: triples and quarantine are two consumers of the same narrow
     # stage; run_pipeline persists `tagged` per shard to avoid a second
     # scan of pages (the expensive part at 10^12 docs).
+    return _canonicalize_tagged(tagged)
 
-    # canonicalize: validate, then skolemize the valid rows.  Validation
-    # is invariant under skolemization (it only rewrites blank-node
-    # lexicals, which stay non-empty; IRI columns are untouched), and
-    # validating FIRST keeps Catalyst from inlining the skolem
-    # concat+xxhash64 CASE expression into the validity filter where it
-    # would be re-evaluated several times per row.
+
+def _canonicalize_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Parsed rows (url + triple + err) → (final_triples, quarantine):
+    split off parse errors, quarantine invalid terms, skolemize, dedup
+    with lineage.
+
+    Validation runs before skolemization.  It is invariant under
+    skolemization (that only rewrites blank-node lexicals, which stay
+    non-empty; IRI columns are untouched), and validating FIRST keeps
+    Catalyst from inlining the skolem concat+xxhash64 CASE expression
+    into the validity filter where it would be re-evaluated several
+    times per row.
+    """
+    quarantine = tagged.filter(F.col("err").isNotNull()).select("url", "err")
+    all_triples = tagged.filter(F.col("err").isNull()).drop("err")
     validated = canonical.validate_triples(all_triples)
     good = validated.filter(F.col("valid")).drop("valid")
     invalid = validated.filter(~F.col("valid")).select(
         "url", F.lit("invalid term").alias("err")
     )
     quarantine = quarantine.unionByName(invalid)
-    sk = canonical.skolemize(good)
-
-    # 4. dedup with lineage
-    final = canonical.dedup_triples(sk, keep_lineage=True)
+    final = canonical.dedup_triples(canonical.skolemize(good), keep_lineage=True)
     return final, quarantine
 
 
@@ -214,18 +219,7 @@ def run_pipeline(
         from pyspark import StorageLevel
 
         tagged = tagged.persist(StorageLevel.DISK_ONLY)  # 2 consumers, 1 scan
-        quarantine = tagged.filter(F.col("err").isNotNull()).select("url", "err")
-        all_triples = tagged.filter(F.col("err").isNull()).drop("err")
-        # validate BEFORE skolemize (see build_shard_triples): same rows
-        # quarantined, but the skolem hash expression stays out of the
-        # validity filter
-        validated = canonical.validate_triples(all_triples)
-        good = validated.filter(F.col("valid")).drop("valid")
-        invalid = validated.filter(~F.col("valid")).select(
-            "url", F.lit("invalid term").alias("err")
-        )
-        quarantine = quarantine.unionByName(invalid)
-        final = canonical.dedup_triples(canonical.skolemize(good), keep_lineage=True)
+        final, quarantine = _canonicalize_tagged(tagged)
 
         # materialize through the store seam: subject hash-bucket
         # partitioning → partition pruning for point lookups and

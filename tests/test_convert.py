@@ -70,7 +70,8 @@ def test_rdf_convert_job_entrypoint(spark, tmp_path):
 def test_convert_line_formats_skolemize_per_file(spark, tmp_path):
     """Review fix: _:b1 in two different N-Triples files is TWO distinct
     nodes (labels are file-scoped); the skolemizing default must not merge
-    them, while --keep-blank-labels preserves raw labels on the fast path."""
+    them, while --keep-blank-labels preserves raw labels.  A file the
+    line reader splits over several partitions is still ONE scope."""
     src = tmp_path / "nt_in"
     src.mkdir()
     (src / "a.nt").write_text('_:b1 <http://p> "from-a" .\n')
@@ -90,6 +91,47 @@ def test_convert_line_formats_skolemize_per_file(spark, tmp_path):
     assert n2 == 2
     back2 = sources.read_ntriples(spark, out2).filter(F.col("err").isNull())
     assert {r.s for r in back2.collect()} == {"_:b1"}
+
+    # a file split over >= 2 partitions keeps one skolem scope
+    split = tmp_path / "nt_split"
+    split.mkdir()
+    (split / "big.nt").write_text("".join(
+        f'_:b1 <http://p> "big-{i:03d}" .\n' for i in range(200)))
+    (split / "small.nt").write_text('_:b1 <http://p> "small" .\n')
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        n_parts = spark.read.text(str(split / "big.nt")).rdd.getNumPartitions()
+        out3 = str(tmp_path / "out_split")
+        n3 = convert.convert(spark, str(split), "ntriples", out3, "ntriples")
+    finally:
+        spark.conf.set(key, old)
+    assert n_parts >= 2
+    assert n3 == 201
+    rows = sources.read_ntriples(spark, out3).filter(F.col("err").isNull()).collect()
+    big = {r.s for r in rows if r.o.startswith("big-")}
+    small = {r.s for r in rows if r.o == "small"}
+    assert len(big) == 1 and len(small) == 1 and big != small
+
+
+def test_convert_line_formats_quarantine_per_line(spark, tmp_path):
+    """One malformed line drops only itself, in both convert modes: the
+    other lines of its file and the other files are all written."""
+    src = tmp_path / "nt_bad"
+    src.mkdir()
+    (src / "a.nt").write_text(
+        '<http://s> <http://p> "a1" .\n'
+        '<http://s> <http://p> "a2" .\n'
+        '<http://s> <http://p> .\n'
+        '_:b1 <http://p> "a3" .\n'
+    )
+    (src / "b.nt").write_text('_:b1 <http://p> "fromb" .\n')
+    for i, skolemize in enumerate((True, False)):
+        out = str(tmp_path / f"out_{i}")
+        n = convert.convert(spark, str(src), "ntriples", out, "ntriples",
+                            skolemize=skolemize)
+        assert n == 4, skolemize
 
 
 def test_convert_nquads_documents_keep_graph(spark, tmp_path):

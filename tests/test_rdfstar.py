@@ -188,6 +188,25 @@ class TestSparkDecode:
         assert [r for r in out if r.err is not None] == []
         assert len(out) == 5
 
+    def test_nt_star_documents_keep_reification_per_doc(self, spark):
+        """Two documents in one batch quote the same blank-node fact:
+        after skolemization each document's statement node has its own
+        four reification rows (the minter never spans two urls)."""
+        from rdf_spark import canonical
+        from rdf_spark.sources import parse_documents
+
+        text = '<< _:a <http://p> <http://o> >> <http://c> "1" .\n'
+        docs = spark.createDataFrame(
+            [("u1", text), ("u2", text)], "url string, text string").coalesce(1)
+        out = canonical.skolemize(
+            parse_documents(docs, fmt="ntriples")).collect()
+        assert [r for r in out if r.err is not None] == []
+        stmts = {r.url: r.s for r in out if r.o == RDF_STATEMENT}
+        assert set(stmts) == {"u1", "u2"} and stmts["u1"] != stmts["u2"]
+        for url, node in stmts.items():
+            reif = [r for r in out if r.s == node and r.p != "http://c"]
+            assert len(reif) == 4 and {r.url for r in reif} == {url}
+
 
 _TRIPLE_DDL = ("s string, s_kind tinyint, p string, o string, "
                "o_kind tinyint, o_datatype string, o_lang string")

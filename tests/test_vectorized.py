@@ -1,16 +1,15 @@
-"""Fast-path soundness: the pandas and pyarrow line parsers must agree with
-the exact document parser on EVERY conformance input (they may route lines
-to the slow path, but never produce different triples or different
-error/success outcomes)."""
+"""Fast-path soundness: the pyarrow line parser must agree with the exact
+document parser on EVERY conformance input (it may route lines to the slow
+path, but never produce different triples or different error/success
+outcomes)."""
 
 import json
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pytest
 
-from rdf_spark import arrow_fast, vectorized
+from rdf_spark import arrow_fast
 from rdf_spark.parsing import ParseError, parse_nquads, parse_ntriples
 
 FIXDIR = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -26,25 +25,6 @@ def _expected(doc, parse_doc):
         return sorted(tuple(r) for r in parse_doc(doc)), False
     except ParseError:
         return None, True
-
-
-@pytest.mark.parametrize("suite,parse_doc", [
-    ("ntriples", parse_ntriples), ("nquads", parse_nquads),
-])
-def test_pandas_fast_path_equivalence(suite, parse_doc):
-    for c in _cases(suite):
-        doc = c["input"]
-        exp, doc_err = _expected(doc, parse_doc)
-        res = vectorized.parse_lines(pd.Series(doc.split("\n")), fmt=suite)
-        n_err = res["err"].notna().sum()
-        rows = sorted(
-            tuple(r) for r in
-            res[res["err"].isna()].drop(columns="err").itertuples(index=False)
-        )
-        if doc_err:
-            assert n_err > 0, c["name"]
-        else:
-            assert n_err == 0 and rows == exp, c["name"]
 
 
 @pytest.mark.parametrize("suite,parse_doc", [

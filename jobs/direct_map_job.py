@@ -67,12 +67,12 @@ def main(argv=None) -> int:
         df, args.table, base=args.base,
         pk=args.pk or None, fks=fks or None,
     )
-    write_rdf(triples, args.out_path, args.out_format)
+    n_triples = write_rdf(triples, args.out_path, args.out_format)
     print(json.dumps({
         "table": args.table,
         "out": args.out_path,
         "format": args.out_format,
-        "n_triples": triples.count(),
+        "n_triples": n_triples,
     }))
     return 0
 

@@ -9,7 +9,7 @@ and the RDF/XML encoder exceed parity).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_spark import encoders, sources
@@ -70,16 +70,27 @@ def _ensure_graph_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def write_rdf(df: DataFrame, path: str, fmt: str) -> None:
+def write_rdf(df: DataFrame, path: str, fmt: str) -> int:
+    """Write ``df`` in serialization ``fmt``; returns its row count.
+
+    The count is a metric observed while ``df`` is read once, not a
+    second action that would re-run ``df``'s plan.  It is reported by
+    the first SQL execution over ``df`` and waits, with no timeout, for
+    one: so each encoder reads ``df`` in exactly one SQL action, with
+    ``df`` under no join that could prune it.  The N-Triples-star
+    encoder reads its input in several joins and actions, so ``df`` is
+    first materialized once (a local checkpoint) and counted there."""
     if fmt not in ENCODERS:
         raise ValueError(f"no encoder for format: {fmt}")
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     if fmt == "ntriples":
         encoders.write_ntriples(df, path)
     elif fmt == "ntriples-star":
         # fold reification statements back into << >> quoted terms
         from rdf_spark.rdfstar import write_ntriples_star
 
-        write_ntriples_star(df, path)
+        write_ntriples_star(df.localCheckpoint(eager=True), path)
     elif fmt == "nquads":
         encoders.write_nquads(_ensure_graph_cols(df), path)
     elif fmt == "jsonld":
@@ -90,6 +101,7 @@ def write_rdf(df: DataFrame, path: str, fmt: str) -> None:
         encoders.write_trig(_ensure_graph_cols(df), path)
     else:
         encoders.write_turtle(df, path)
+    return obs.get["n"]
 
 
 def convert(spark: SparkSession, in_path: str, in_fmt: str, out_path: str,
@@ -98,7 +110,8 @@ def convert(spark: SparkSession, in_path: str, in_fmt: str, out_path: str,
             schema_format: str = "turtle", resolve_sameas: bool = False,
             keep_sameas_links: bool = False,
             canonicalize: bool = False) -> int:
-    """Convert between serializations; returns the triple count written.
+    """Convert between serializations; returns the triple count written
+    (observed during the write: input is read and parsed once).
 
     ``infer="rdfs"`` materializes the ρdf closure between decode and
     encode (ops/reasoning.py) — the distributed analogue of
@@ -162,5 +175,4 @@ def convert(spark: SparkSession, in_path: str, in_fmt: str, out_path: str,
             good = rdfs_closure(good, schema=schema)
     elif infer:
         raise ValueError(f"unknown inference profile: {infer}")
-    write_rdf(good, out_path, out_fmt)
-    return good.count()
+    return write_rdf(good, out_path, out_fmt)

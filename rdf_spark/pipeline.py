@@ -26,7 +26,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_spark import canonical, extraction
@@ -51,6 +52,12 @@ class ShardResult:
 
 def _shard_col(n_shards: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(n_shards)).cast("int")
+
+
+def subject_bucket(n_buckets: int):
+    """The store's subject hash-bucket of each row: ``pmod(xxhash64(s),
+    n)`` — the one bucketing expression for writes, merges and audits."""
+    return F.pmod(F.xxhash64(F.col("s")), F.lit(n_buckets)).cast("int")
 
 
 def build_shard_triples(pages: DataFrame, aliases: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -158,118 +165,127 @@ def run_pipeline(
     alias_bc = spark.sparkContext.broadcast(alias_rows)
     # reuse the one collect for the disambiguation pass's dictionary too
     surface_list = sorted({s for s, _, _ in alias_rows})
-    for k in range(n_shards):
-        manifest_path = os.path.join(out_dir, MANIFEST_DIR, f"shard-{k}.json")
-        if resume and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                m = json.load(f)
-            kwargs = {x: m[x] for x in m if x not in ("ts", "skipped", "buckets")}
-            results.append(ShardResult(skipped=True, **kwargs))
-            continue
-        t0 = time.time()
-        shard_pages = pages.filter(F.col("_shard") == k).drop("_shard")
-        tagged = extraction.fused_extract_parse_link(shard_pages, alias_bc)
-        if relatedness is not None:
-            # replace the fused context-free link rows with the
-            # coherence-aware decisions (p is NULL on quarantine rows —
-            # null-safe compare keeps them)
-            tagged = tagged.filter(
-                ~F.col("p").eqNullSafe(F.lit(extraction.MENTIONS_PREDICATE))
-            )
-            mentions = extraction.detect_mentions(
-                extraction.extract_stage(shard_pages), aliases,
-                surfaces=surface_list,
-            )
-            linked = extraction.disambiguate_mentions(
-                mentions, aliases, relatedness,
-                coherence_weight=coherence_weight,
-            )
-            tagged = tagged.unionByName(
-                extraction.emit_link_triples(linked).withColumn(
-                    "err", F.lit(None).cast("string")
+    try:
+        for k in range(n_shards):
+            manifest_path = os.path.join(out_dir, MANIFEST_DIR, f"shard-{k}.json")
+            if resume and os.path.exists(manifest_path):
+                with open(manifest_path) as f:
+                    m = json.load(f)
+                kwargs = {x: m[x] for x in m if x not in ("ts", "skipped", "buckets")}
+                results.append(ShardResult(skipped=True, **kwargs))
+                continue
+            t0 = time.time()
+            shard_pages = pages.filter(F.col("_shard") == k).drop("_shard")
+            # counters come from the shard's own writes: metrics observed
+            # during them plus the written files' footers (no recount,
+            # re-read or store scan after them); the page count sits on the
+            # fused stage's input only, so it counts each page once
+            pages_obs = Observation()
+            tagged = extraction.fused_extract_parse_link(
+                shard_pages.observe(pages_obs, F.count(F.lit(1)).alias("n")),
+                alias_bc)
+            if relatedness is not None:
+                # replace the fused context-free link rows with the
+                # coherence-aware decisions (p is NULL on quarantine rows —
+                # null-safe compare keeps them)
+                tagged = tagged.filter(
+                    ~F.col("p").eqNullSafe(F.lit(extraction.MENTIONS_PREDICATE))
                 )
-            )
-        for fmt in extra_fmts:
-            if fmt == "microdata":
-                from rdf_spark import microdata as _md
-
-                ex = _md.parse_microdata(shard_pages)
-            elif fmt == "rdfa":
-                from rdf_spark import rdfa as _ra
-
-                ex = _ra.parse_rdfa(shard_pages)
-            else:
-                from rdf_spark.ops import html as _html
-
-                ex = _html.parse_html_structured(shard_pages, fmts=(fmt,))
-            pfx = fmt[0]  # _:b1 → _:jb1 etc.: island labels must never
-            # collide with the turtle blocks' under the url-keyed skolemizer
-            relab = lambda c, kc: F.when(  # noqa: E731
-                F.col(kc) == 0, F.regexp_replace(F.col(c), "^_:", "_:" + pfx)
-            ).otherwise(F.col(c))
-            tagged = tagged.unionByName(
-                ex.select(
-                    "url",
-                    relab("s", "s_kind").alias("s"), "s_kind",
-                    "p",
-                    relab("o", "o_kind").alias("o"), "o_kind",
-                    "o_datatype", "o_lang", "err",
+                mentions = extraction.detect_mentions(
+                    extraction.extract_stage(shard_pages), aliases,
+                    surfaces=surface_list,
                 )
+                linked = extraction.disambiguate_mentions(
+                    mentions, aliases, relatedness,
+                    coherence_weight=coherence_weight,
+                )
+                tagged = tagged.unionByName(
+                    extraction.emit_link_triples(linked).withColumn(
+                        "err", F.lit(None).cast("string")
+                    )
+                )
+            for fmt in extra_fmts:
+                if fmt == "microdata":
+                    from rdf_spark import microdata as _md
+
+                    ex = _md.parse_microdata(shard_pages)
+                elif fmt == "rdfa":
+                    from rdf_spark import rdfa as _ra
+
+                    ex = _ra.parse_rdfa(shard_pages)
+                else:
+                    from rdf_spark.ops import html as _html
+
+                    ex = _html.parse_html_structured(shard_pages, fmts=(fmt,))
+                pfx = fmt[0]  # _:b1 → _:jb1 etc.: island labels must never
+                # collide with the turtle blocks' under the url-keyed skolemizer
+                relab = lambda c, kc: F.when(  # noqa: E731
+                    F.col(kc) == 0, F.regexp_replace(F.col(c), "^_:", "_:" + pfx)
+                ).otherwise(F.col(c))
+                tagged = tagged.unionByName(
+                    ex.select(
+                        "url",
+                        relab("s", "s_kind").alias("s"), "s_kind",
+                        "p",
+                        relab("o", "o_kind").alias("o"), "o_kind",
+                        "o_datatype", "o_lang", "err",
+                    )
+                )
+            tagged = tagged.persist(StorageLevel.DISK_ONLY)  # 2 consumers, 1 scan
+            try:
+                final, quarantine = _canonicalize_tagged(tagged)
+                # the per-bucket triple counts come from the written files
+                # (store.bucket_sizes below), so no counter's per-row cost
+                # grows with the bucket count
+                links_obs, quarantine_obs = Observation(), Observation()
+                final = final.observe(
+                    links_obs,
+                    F.count_if(F.col("p") == extraction.MENTIONS_PREDICATE).alias("n"),
+                )
+                is_invalid = F.col("err") == "invalid term"
+                quarantine = quarantine.observe(
+                    quarantine_obs,
+                    F.count_if(is_invalid).alias("invalid"),
+                    F.count_if(~is_invalid).alias("parse"),
+                )
+                # materialize through the store seam: subject hash-bucket
+                # partitioning → partition pruning for point lookups and
+                # co-located downstream merges
+                store.write_shard(final, k)
+                store.write_quarantine(quarantine, k)
+            finally:
+                tagged.unpersist()
+            n_pages = pages_obs.get["n"]
+            qcounts = quarantine_obs.get
+            # per-PARTITION lineage counters (north rule): triples per
+            # non-empty store bucket, so resumable audits can localize
+            # loss/skew to a single bucket partition without a rescan
+            per_bucket = store.bucket_sizes(spark, k)
+            n_final = sum(per_bucket.values())
+            n_link = links_obs.get["n"]
+            res = ShardResult(
+                shard=k,
+                n_pages=n_pages,
+                n_rdf_triples=n_final - n_link,
+                n_link_triples=n_link,
+                n_parse_errors=qcounts["parse"],
+                n_invalid=qcounts["invalid"],
+                n_triples_final=n_final,
+                wall_s=round(time.time() - t0, 3),
             )
-        from pyspark import StorageLevel
-
-        tagged = tagged.persist(StorageLevel.DISK_ONLY)  # 2 consumers, 1 scan
-        final, quarantine = _canonicalize_tagged(tagged)
-
-        # materialize through the store seam: subject hash-bucket
-        # partitioning → partition pruning for point lookups and
-        # co-located downstream merges
-        store.write_shard(final, k)
-        store.write_quarantine(quarantine, k)
-
-        # counters (single pass each over small aggregates)
-        n_pages = shard_pages.count()
-        qdf = store.read_quarantine(spark, k)
-        qcounts = {
-            r.kind: r.n
-            for r in qdf.groupBy(
-                F.when(F.col("err") == "invalid term", "invalid")
-                .otherwise("parse")
-                .alias("kind")
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        # per-PARTITION lineage counters (north rule): triple count per
-        # store bucket in one pass with the totals — resumable audits can
-        # localize loss/skew to a single bucket partition without a rescan
-        per_bucket = {
-            int(r.bucket): (r.n, r.links or 0)
-            for r in store.bucket_counts(spark, k).collect()
-        }
-        n_final = sum(n for n, _ in per_bucket.values())
-        n_link = sum(l for _, l in per_bucket.values())
-
-        tagged.unpersist()
-        res = ShardResult(
-            shard=k,
-            n_pages=n_pages,
-            n_rdf_triples=n_final - n_link,
-            n_link_triples=n_link,
-            n_parse_errors=qcounts.get("parse", 0),
-            n_invalid=qcounts.get("invalid", 0),
-            n_triples_final=n_final,
-            wall_s=round(time.time() - t0, 3),
-        )
-        # manifest written last → crash before this line reruns the shard
-        with open(manifest_path, "w") as f:
-            json.dump(
-                {
-                    **res.__dict__,
-                    "ts": time.time(),
-                    "buckets": {str(b): n for b, (n, _) in sorted(per_bucket.items())},
-                },
-                f,
-            )
-        results.append(res)
+            # manifest written last → crash before this line reruns the shard
+            with open(manifest_path, "w") as f:
+                json.dump(
+                    {
+                        **res.__dict__,
+                        "ts": time.time(),
+                        "buckets": {str(b): n for b, n in sorted(per_bucket.items())},
+                    },
+                    f,
+                )
+            results.append(res)
+    finally:
+        alias_bc.destroy()  # no broadcast outlives the run
     return results
 
 
@@ -303,9 +319,7 @@ def materialize_triples(
                 "and a catalog (spark.sql.catalog.*) configured; fall back to "
                 "table_format='parquet'"
             ) from e
-    store = df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("s")), F.lit(n_buckets)).cast("int")
-    )
+    store = df.withColumn("bucket", subject_bucket(n_buckets))
     (
         store.repartition("bucket")
         .sortWithinPartitions("s", "p")  # parquet min/max stats → subject pruning
@@ -377,10 +391,8 @@ def merge_new_triples(
     key = dedup_key(new_triples.columns)
     new_b = (
         new_triples.dropDuplicates(key)
-        .withColumn("bucket", F.pmod(F.xxhash64(F.col("s")), F.lit(n_buckets)).cast("int"))
+        .withColumn("bucket", subject_bucket(n_buckets))
     )
-    from pyspark import StorageLevel
-
     new_b = new_b.persist(StorageLevel.MEMORY_AND_DISK)
     affected = [r.bucket for r in new_b.select("bucket").distinct().collect()]
     existing = _pruned_store_scan(spark, store_path, affected, key)

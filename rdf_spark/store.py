@@ -23,10 +23,18 @@ internals.  Two implementations:
 Both stores share shard layout semantics: a shard is an idempotent
 overwrite unit (manifest-resume in run_pipeline), a bucket is the
 subject-hash pruning unit for point lookups and co-located merges.
+
+Seam rule: ``write_shard`` and ``write_quarantine`` must write the frame
+they are given with one SQL action over it, even when it is empty —
+run_pipeline reads counters observed on those frames (a
+``pyspark.sql.Observation``) and ``Observation.get`` waits, with no
+timeout, until a SQL execution reports them.  After ``write_shard``,
+``bucket_sizes`` gives the shard's rows per non-empty engine bucket.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,11 +96,27 @@ class ParquetBucketStore:
     def read_quarantine(self, spark: SparkSession, shard: int) -> DataFrame:
         return spark.read.parquet(self.quarantine_path(shard))
 
+    def bucket_sizes(self, spark: SparkSession, shard: int) -> dict[int, int]:
+        """Rows per non-empty bucket of a written shard — the
+        per-partition lineage counters run_pipeline records in its
+        manifest (north rule auditability) — summed from the parquet
+        footers of the shard's files: no Spark job, and a cost per file,
+        not per row."""
+        import pyarrow.parquet as pq
+
+        sizes: dict[int, int] = {}
+        for f in glob.glob(os.path.join(self.shard_path(shard), "bucket=*", "*.parquet")):
+            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            sizes[b] = sizes.get(b, 0) + pq.read_metadata(f).num_rows
+        return {b: n for b, n in sizes.items() if n}
+
     def bucket_counts(self, spark: SparkSession, shard: int) -> DataFrame:
-        """(bucket, n, links) per store bucket — the per-partition lineage
-        counters the manifest records (north rule auditability).  A
-        shard with no triples writes no bucket partition, hence no file
-        to read a schema from: it has no buckets."""
+        """(bucket, n, links) per store bucket — an exact recount, by a
+        scan of the shard, of what bucket_sizes reads from the footers
+        and of the link count run_pipeline observes during the write.
+        A shard with no
+        triples writes no bucket partition, hence no file to read a
+        schema from: it has no buckets."""
         from pyspark.errors import AnalysisException
 
         try:
@@ -223,19 +247,24 @@ class IcebergTripleStore:
         xxhash64), independent of Iceberg's hidden murmur3 bucketing —
         the manifest counters must stay comparable across store formats,
         and Iceberg's physical bucket is an implementation detail."""
+        from rdf_spark.pipeline import subject_bucket
+
         self._require(spark)
         return (
             self.read_triples(spark, shard)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col("s")), F.lit(self.n_buckets)).cast("int"),
-            )
+            .withColumn("bucket", subject_bucket(self.n_buckets))
             .groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum((F.col("p") == _LINK_PRED).cast("long")).alias("links"),
             )
         )
+
+    def bucket_sizes(self, spark: SparkSession, shard: int) -> dict[int, int]:
+        """Rows per non-empty engine bucket.  Iceberg's file metadata is
+        keyed by its own murmur3 buckets, not the engine's, so this is
+        the bucket_counts recount (one scan of the shard)."""
+        return {r.bucket: r.n for r in self.bucket_counts(spark, shard).collect()}
 
 
 TRIPLE_KEY_COLS = ("s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang")

@@ -32,3 +32,35 @@ def fastpath_cap(request, set_fastpath_cap):
     if request.param != "default":
         set_fastpath_cap(request.param)
     return request.param
+
+
+@pytest.fixture
+def new_sql_plans(spark):
+    """``new(path=None)``: the physical plans of the session's SQL
+    executions that ran since the previous call (the first call: since
+    the test began); with ``path``, only those that read files under it.
+    Execution ids grow by one per execution, so only new plans are
+    fetched — the status store may hold hundreds of large ones."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    seen = last_id()
+
+    def new(path: str | None = None) -> list[str]:
+        nonlocal seen
+        end = last_id()
+        execs = [store.execution(i) for i in range(seen + 1, end + 1)]
+        seen = end
+        fresh = [e.get().physicalPlanDescription() for e in execs
+                 if e.isDefined()]
+        if path is None:
+            return fresh
+        return [p for p in fresh
+                if any(ln.startswith("Location:") and path in ln
+                       for ln in p.splitlines())]
+
+    return new

@@ -12,6 +12,22 @@ ex:s a ex:T ; ex:p "v"@en ; ex:n 42 .
 """
 
 
+# four good N-Triples lines, a quoted triple (five rows once reified) and
+# a malformed line
+MIXED_NT = (
+    '<http://x/rex> <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <http://x/Dog> .\n'
+    '<http://x/Dog> <http://www.w3.org/2000/01/rdf-schema#subClassOf> <http://x/Mammal> .\n'
+    '<http://x/rex> <http://x/name> "Rex"@en .\n'
+    '_:b1 <http://x/knows> <http://x/rex> .\n'
+    '<< <http://x/rex> <http://x/age> "3" >> <http://x/src> <http://x/vet> .\n'
+    '<http://x/s> <http://x/p> .\n'
+)
+
+
+def _n_lines(out: str) -> int:
+    return sum(1 for f in glob.glob(out + "/part-*") for _ in open(f))
+
+
 def test_convert_turtle_to_ntriples_to_nquads(spark, tmp_path):
     ttl_dir = tmp_path / "in_ttl"
     ttl_dir.mkdir()
@@ -131,7 +147,7 @@ def test_convert_line_formats_quarantine_per_line(spark, tmp_path):
         out = str(tmp_path / f"out_{i}")
         n = convert.convert(spark, str(src), "ntriples", out, "ntriples",
                             skolemize=skolemize)
-        assert n == 4, skolemize
+        assert n == _n_lines(out) == 4, skolemize
 
 
 def test_convert_nquads_documents_keep_graph(spark, tmp_path):
@@ -180,6 +196,7 @@ def test_convert_with_rdfs_inference(spark, tmp_path):
     # 1 input + 2 inherited types + 3 subclass facts (2 direct entailed
     # copies + 1 transitive)
     assert json.loads(buf.getvalue().strip().splitlines()[-1])["triples"] == 6
+    assert _n_lines(out) == 6
     back = convert.read_rdf(spark, out, "ntriples")
     objs = {r.o for r in back.filter(
         F.col("s") == "http://x/rex").collect()}
@@ -283,3 +300,29 @@ def test_convert_with_owl_inference(spark, tmp_path):
     assert "<http://e/a> <http://e/part> <http://e/c> ." in lines
     assert "<http://e/c> <http://e/contains> <http://e/a> ." in lines
     assert n == len(lines)
+
+
+def test_convert_count_is_observed_once(spark, tmp_path, new_sql_plans):
+    """convert's returned count is the exact row count of what it encoded
+    (the N-Triples output line count) for every encoder, and the default
+    conversion reads its input once."""
+    src = tmp_path / "mixed"
+    src.mkdir()
+    (src / "a.nt").write_text(MIXED_NT)
+    new_sql_plans()
+    n = convert.convert(spark, str(src), "ntriples", str(tmp_path / "nt"),
+                        "ntriples")
+    assert len(new_sql_plans(str(src))) == 1
+    assert n == _n_lines(str(tmp_path / "nt")) == 9
+    for fmt in sorted(convert.ENCODERS - {"ntriples"}):
+        assert convert.convert(spark, str(src), "ntriples",
+                               str(tmp_path / fmt), fmt) == n, fmt
+    # with no quoted triple the star encoder's quoted-term branch is
+    # empty; the count must still cover every row
+    plain = tmp_path / "plain"
+    plain.mkdir()
+    (plain / "a.nt").write_text("".join(
+        ln + "\n" for ln in MIXED_NT.splitlines() if "<<" not in ln))
+    star = str(tmp_path / "plain_star")
+    assert convert.convert(spark, str(plain), "ntriples", star,
+                           "ntriples-star") == _n_lines(star) == 4

@@ -121,18 +121,9 @@ def test_factor_scales_the_cap(spark, set_fastpath_cap):
     assert fastpath.try_local([df], len)[0] is None
 
 
-def _sql_executions(spark) -> dict:
-    """executionId -> physical plan of the session's SQL executions."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {
-        execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
-        for i in range(execs.size())
-    }
-
-
 @pytest.mark.parametrize("fn", ["_closure_pairs", "_reach_from"])
-def test_sparql_closure_fallback_dedups_once(spark, set_fastpath_cap, fn):
+def test_sparql_closure_fallback_dedups_once(spark, set_fastpath_cap,
+                                            new_sql_plans, fn):
     """At cap 0 the over-cap fallback reuses the probe's checkpoint: the
     dedup Exchange over the input runs once, not once for the probe and
     again for the fallback."""
@@ -141,7 +132,7 @@ def test_sparql_closure_fallback_dedups_once(spark, set_fastpath_cap, fn):
     edges = spark.range(10).select(
         (F.col("id") % 5).cast("string").alias("_src"),
         ((F.col("id") + 1) % 5).cast("string").alias("_dst"))
-    before = set(_sql_executions(spark))
+    new_sql_plans()
     if fn == "_closure_pairs":
         out = sparql._closure_pairs(edges)
         expect = 5 * 5
@@ -150,9 +141,8 @@ def test_sparql_closure_fallback_dedups_once(spark, set_fastpath_cap, fn):
         expect = 5
     assert out.count() == expect
     # executions that shuffle the raw Range input (its dedup)
-    new = [plan for i, plan in _sql_executions(spark).items()
-           if i not in before]
-    assert sum("Range" in p and "Exchange" in p for p in new) == 1
+    assert sum("Range" in p and "Exchange" in p
+               for p in new_sql_plans()) == 1
 
 
 def test_no_hand_rolled_probe_outside_fastpath():

@@ -11,6 +11,32 @@ from pyspark.sql import functions as F
 from rdf_spark import canonical, datagen, extraction, pipeline
 
 
+def _assert_counters_are_recounts(spark, out, pages, n_shards, n_buckets):
+    """Every shard manifest equals exact recounts of what the shard wrote:
+    the store's bucket_counts, a groupBy of its quarantine by error class,
+    and a count of the shard's pages."""
+    from rdf_spark.store import ParquetBucketStore
+
+    store = ParquetBucketStore(out, n_buckets)
+    n_pages = dict(pages.groupBy(pipeline._shard_col(n_shards).alias("k"))
+                   .count().collect())
+    for k in range(n_shards):
+        with open(os.path.join(out, pipeline.MANIFEST_DIR,
+                               f"shard-{k}.json")) as f:
+            man = json.load(f)
+        per_bucket = {str(r.bucket): (r.n, r.links)
+                      for r in store.bucket_counts(spark, k).collect()}
+        assert man["buckets"] == {b: n for b, (n, _) in per_bucket.items()}
+        assert man["n_link_triples"] == sum(l for _, l in per_bucket.values())
+        assert man["n_triples_final"] == sum(man["buckets"].values())
+        assert man["n_pages"] == n_pages.get(k, 0)
+        q = dict(store.read_quarantine(spark, k).groupBy(
+            F.when(F.col("err") == "invalid term", "invalid")
+            .otherwise("parse")).count().collect())
+        assert man["n_parse_errors"] == q.get("parse", 0)
+        assert man["n_invalid"] == q.get("invalid", 0)
+
+
 def test_extraction_byte_identical(spark):
     """Per-url invariant (BASELINE.json:15): pipeline extractor output ==
     the pages.text column, byte for byte."""
@@ -472,10 +498,54 @@ def test_empty_shard_writes_zero_manifest(spark, tmp_path):
         man = json.load(open(os.path.join(out, "_manifest",
                                           f"shard-{r.shard}.json")))
         assert man["n_triples_final"] == 0 and man["buckets"] == {}
+    _assert_counters_are_recounts(spark, out, pages, 4, 4)
     again = pipeline.run_pipeline(
         spark, pages, datagen.aliases(spark), out, n_shards=4, n_buckets=4,
     )
     assert all(r.skipped for r in again)
+
+
+@pytest.mark.parametrize("n_buckets", [3, 16])
+def test_observed_counters_equal_recounts(spark, tmp_path, new_sql_plans,
+                                          n_buckets):
+    """The manifest counters are observed during the shard's writes; they
+    equal exact recounts of the written store, quarantine and pages, and
+    the run scans none of its own output."""
+    pages = datagen.pages(spark, 40, 3)
+    # one page whose Turtle parses but carries an invalid language tag
+    bad = pages.limit(1).select(
+        F.lit("https://invalid.example/1").alias("url"), "warc_ts",
+        F.encode(F.lit('<html><script type="text/turtle"><urn:a> <urn:p> '
+                       '"x"@en-gb-oed .</script></html>'), "utf-8")
+        .alias("html"), "text", "lang")
+    pages = pages.unionByName(bad)
+    out = str(tmp_path / f"kg_obs{n_buckets}")
+    new_sql_plans()
+    results = pipeline.run_pipeline(spark, pages, datagen.aliases(spark), out,
+                                    n_shards=1, n_buckets=n_buckets)
+    assert new_sql_plans(out) == []
+    assert results[0].n_invalid == 1 and results[0].n_parse_errors > 0
+    _assert_counters_are_recounts(spark, out, pages, 1, n_buckets)
+
+
+def test_failed_shard_releases_persisted_rdds(spark, tmp_path):
+    """A store whose write raises leaves no persisted RDD behind."""
+    from rdf_spark.store import ParquetBucketStore
+
+    class FailingStore(ParquetBucketStore):
+        def write_quarantine(self, quarantine, shard):
+            raise RuntimeError("quarantine sink down")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    out = str(tmp_path / "kg_fail")
+    with pytest.raises(RuntimeError, match="quarantine sink down"):
+        pipeline.run_pipeline(
+            spark, datagen.pages(spark, 20), datagen.aliases(spark), out,
+            n_shards=1, n_buckets=2, store=FailingStore(out, 2))
+    assert persisted() == before
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -562,6 +632,7 @@ def test_pipeline_relatedness_disambiguation(spark, tmp_path):
         relatedness=rel, coherence_weight=5.0,
     )
     assert res[0].n_link_triples == 5  # 2 + 2 + 1 mentions
+    _assert_counters_are_recounts(spark, out1, pages, 1, 2)
     tri = pipeline.read_triple_store(spark, out1)
     links = {(r.s, r.o)
              for r in tri.filter(F.col("p") == MENTIONS_PREDICATE).collect()}
@@ -670,6 +741,7 @@ def test_pipeline_extra_fmts_jsonld(spark, tmp_path):
         spark, pages, aliases, out, n_shards=2, n_buckets=4,
         extra_fmts=("jsonld",),
     )
+    _assert_counters_are_recounts(spark, out, pages, 2, 4)
     store = pipeline.read_triple_store(spark, out)
     # jsonld route contributes the typed-depth triple for every page
     depth = store.filter(F.col("p") == "urn:v:depth")

@@ -47,7 +47,7 @@ def main(argv=None) -> int:
     if bool(args.cdx) == bool(args.urls):
         ap.error("exactly one of --cdx or --urls is required")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     spark = SparkSession.builder.appName("crawl-plan").getOrCreate()
 
@@ -98,12 +98,15 @@ def main(argv=None) -> int:
         from rdf_spark.ops.url import surt_col
 
         plan = plan.withColumn("surt_key", surt_col(F.col("url")))
-    plan.write.mode("overwrite").parquet(args.out)
+    urls = Observation()
+    plan.observe(urls, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite").parquet(args.out)
 
-    out = spark.read.parquet(args.out)
-    hosts = out.select("host").distinct().count()
+    # the url count is observed while written; the host count stays a
+    # read: observed metrics cannot hold a distinct aggregate
+    hosts = spark.read.parquet(args.out).select("host").distinct().count()
     summary = {
-        "urls": out.count(),
+        "urls": urls.get["n"],
         "hosts": hosts,
         "index_errors": n_err,
         "out": args.out,

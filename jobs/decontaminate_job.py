@@ -45,7 +45,7 @@ def main(argv=None) -> int:
     ap.add_argument("--threshold", type=float, default=0.95)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     spark = SparkSession.builder.appName("decontaminate").getOrCreate()
 
@@ -72,9 +72,12 @@ def main(argv=None) -> int:
             eval_text_col=args.eval_text_col,
             broadcast_eval=not args.no_broadcast,
         )
-    hits.write.mode("overwrite").parquet(f"{args.out_path}/contaminated")
+    # counts are observed while written, not by re-reading the output
+    obs = Observation()
+    hits.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite").parquet(f"{args.out_path}/contaminated")
     hits = spark.read.parquet(f"{args.out_path}/contaminated")
-    n_bad = hits.count()
+    n_bad = obs.get["n"]
     result = {"out": args.out_path,
               "mode": "embeddings" if args.embeddings else f"ngram_{args.n}",
               "contaminated": n_bad}
@@ -87,8 +90,10 @@ def main(argv=None) -> int:
             corpus[args.key_col].eqNullSafe(hits[args.key_col]),
             how="left_anti",
         )
-        clean.write.mode("overwrite").parquet(f"{args.out_path}/clean")
-        result["clean"] = spark.read.parquet(f"{args.out_path}/clean").count()
+        obs = Observation()
+        clean.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").parquet(f"{args.out_path}/clean")
+        result["clean"] = obs.get["n"]
     print(json.dumps(result))
     return 0
 

@@ -44,7 +44,7 @@ def main(argv=None) -> int:
                          "confidence")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     spark = SparkSession.builder.appName("kg-fuse").getOrCreate()
 
@@ -60,14 +60,16 @@ def main(argv=None) -> int:
     if args.min_confidence > 0.0:
         fused = fused.filter(
             F.col("confidence") >= args.min_confidence)
-    fused.write.mode("overwrite").parquet(args.out)
-    stats = {
-        "facts": spark.read.parquet(args.out).count(),
-        "out": args.out,
-    }
+    # counted while written, not by re-reading the output
+    facts = Observation()
+    fused.observe(facts, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite").parquet(args.out)
+    stats = {"facts": facts.get["n"], "out": args.out}
     if args.conflicts:
         value_conflicts(assertions, **kw).write.mode(
             "overwrite").parquet(args.conflicts)
+        # a distinct count stays a read: observed metrics cannot hold a
+        # distinct aggregate
         stats["contested_facts"] = (
             spark.read.parquet(args.conflicts)
             .select("s", "p").distinct().count()

@@ -84,7 +84,7 @@ def main(argv=None) -> int:
         ap.error("exactly one of --query / --query-file is required")
     q = args.query or open(args.query_file).read()
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     spark = SparkSession.builder.appName("sparql-query").getOrCreate()
 
@@ -109,9 +109,10 @@ def main(argv=None) -> int:
             ap.error("update requests require --out (the input store "
                      "is never modified in place)")
         updated = sparql.sparql_update(triples, q)
-        updated.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"rows": spark.read.parquet(args.out).count(),
-                          "out": args.out}))
+        obs = Observation()
+        updated.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").parquet(args.out)
+        print(json.dumps({"rows": obs.get["n"], "out": args.out}))
         return 0
     if form == "SELECT":
         df = sparql.sparql_select(triples, q)
@@ -128,17 +129,17 @@ def main(argv=None) -> int:
                           "format": "srj"}))
         return 0
     if args.out:
-        w = df.write.mode("overwrite")
+        # the row count is observed while written, not read back
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite")
         if args.out_format == "csv":
             w.option("header", True).csv(args.out)
-            n = spark.read.option("header", True).csv(args.out).count()
         elif args.out_format == "json":
             w.json(args.out)
-            n = spark.read.json(args.out).count()
         else:
             w.parquet(args.out)
-            n = spark.read.parquet(args.out).count()
-        print(json.dumps({"rows": n, "out": args.out,
+        print(json.dumps({"rows": obs.get["n"], "out": args.out,
                           "format": args.out_format}))
     else:
         df.show(100, truncate=False)

@@ -33,10 +33,11 @@ def main(argv=None) -> int:
     ap.add_argument("--key-col", default="doc_id")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     spark = SparkSession.builder.appName("bpe-tokenize").getOrCreate()
 
+    from rdf_spark.ops import fastpath
     from rdf_spark.ops.bpe import apply_bpe, train_bpe
 
     docs = spark.read.parquet(args.in_path)
@@ -48,8 +49,8 @@ def main(argv=None) -> int:
             docs, n_merges=args.n_merges,
             text_col=args.text_col, id_col=args.key_col,
         )
-        spark.createDataFrame(
-            [(i + 1, x, y) for i, (x, y) in enumerate(merges)],
+        fastpath.local_frame(
+            spark, [(i + 1, x, y) for i, (x, y) in enumerate(merges)],
             "step int, x string, y string",
         ).coalesce(1).write.mode("overwrite").parquet(
             args.out_path + "/merges"
@@ -59,8 +60,11 @@ def main(argv=None) -> int:
         toks = apply_bpe(
             docs, merges, text_col=args.text_col, id_col=args.key_col
         )
-        toks.write.mode("overwrite").parquet(args.out_path + "/tokens")
-        n_tokens = spark.read.parquet(args.out_path + "/tokens").count()
+        # counted while written, not by re-reading the output
+        obs = Observation()
+        toks.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").parquet(args.out_path + "/tokens")
+        n_tokens = obs.get["n"]
     print(json.dumps({
         "out": args.out_path,
         "merges": len(merges),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_spark import encoders, sources
+from rdf_spark.ops import fastpath
 
 DECODERS = {"ntriples", "nquads", "turtle", "trig", "jsonld", "rdfxml"}
 ENCODERS = {"ntriples", "nquads", "turtle", "trig", "jsonld", "rdfxml",
@@ -79,7 +80,8 @@ def write_rdf(df: DataFrame, path: str, fmt: str) -> int:
     one: so each encoder reads ``df`` in exactly one SQL action, with
     ``df`` under no join that could prune it.  The N-Triples-star
     encoder reads its input in several joins and actions, so ``df`` is
-    first materialized once (a local checkpoint) and counted there."""
+    first materialized once (a local checkpoint, released once the write
+    returns) and counted there."""
     if fmt not in ENCODERS:
         raise ValueError(f"no encoder for format: {fmt}")
     obs = Observation()
@@ -90,7 +92,11 @@ def write_rdf(df: DataFrame, path: str, fmt: str) -> int:
         # fold reification statements back into << >> quoted terms
         from rdf_spark.rdfstar import write_ntriples_star
 
-        write_ntriples_star(df.localCheckpoint(eager=True), path)
+        checkpoint = df.localCheckpoint(eager=True)
+        try:
+            write_ntriples_star(checkpoint, path)
+        finally:
+            fastpath.release(checkpoint, None)
     elif fmt == "nquads":
         encoders.write_nquads(_ensure_graph_cols(df), path)
     elif fmt == "jsonld":

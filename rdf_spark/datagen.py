@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rdf_spark.ops import fastpath
+
 # Gazetteer: (surface form, entity IRI, link prior).
 ENTITIES = [
     ("Ada Lovelace", "http://kg.example/entity/Ada_Lovelace", 0.95),
@@ -46,7 +48,8 @@ DOMAINS = [
 
 
 def aliases(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ENTITIES, "surface string, entity_iri string, prior double")
+    return fastpath.local_frame(
+        spark, ENTITIES, "surface string, entity_iri string, prior double")
 
 
 def pages(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:

@@ -19,13 +19,32 @@ in-process replica of the same round schedule is one job.
 A checkpoint taken here is released once a replica result that does
 not read it is returned — never on the fallback, whose later reads
 would fail on the freed blocks.
+
+A replica's result, like every frame the library builds from driver
+rows, goes through :func:`local_frame`: one Arrow table handed to the
+JVM, which keeps it as a ``LocalRelation`` (or, above
+``spark.sql.execution.arrow.localRelationThreshold`` bytes, as an RDD
+of Arrow batches).  ``createDataFrame`` over Python rows instead
+builds a pickled Python RDD, and every read of it runs
+``defaultParallelism`` Python tasks.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from decimal import ROUND_HALF_UP, Decimal
+from typing import Callable, Iterable, Sequence
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DataType,
+    DateType,
+    DecimalType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from rdf_spark.ops.planutil import _GEN_NODES, _PY_NODES, plan_has
 
@@ -35,6 +54,42 @@ from rdf_spark.ops.planutil import _GEN_NODES, _PY_NODES, plan_has
 LOCAL_ROWS_MAX = 200_000
 
 _RESCAN_NODES = ("Exchange",) + _PY_NODES + _GEN_NODES
+
+
+def _arrow_column(values: Sequence, dtype: DataType, atype: pa.DataType):
+    """One column of Python values as an Arrow array of ``atype``, the
+    values converted as ``createDataFrame(rows, schema)`` converts
+    them: dates and timestamps through the Spark type's own
+    ``toInternal`` (a naive timestamp is local time), decimals rounded
+    HALF_UP to the column's scale."""
+    if isinstance(dtype, (DateType, TimestampType, TimestampNTZType)):
+        internal = [None if v is None else dtype.toInternal(v) for v in values]
+        raw = pa.int32() if isinstance(dtype, DateType) else pa.int64()
+        return pa.array(internal, type=raw).cast(atype)
+    if isinstance(dtype, DecimalType):
+        step = Decimal(1).scaleb(-dtype.scale)
+        values = [None if v is None else v.quantize(step, ROUND_HALF_UP)
+                  for v in values]
+    return pa.array(values, type=atype)
+
+
+def local_frame(spark: SparkSession, rows: Iterable,
+                schema: StructType | str) -> DataFrame:
+    """The frame ``spark.createDataFrame(rows, schema)`` gives — same
+    rows, column names, types and nullability — built from one Arrow
+    table, so reading it runs no Python task.  ``rows`` are tuples in
+    ``schema``'s column order; ``schema`` is a ``StructType`` or a DDL
+    string such as ``"node string, rank double"``."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [_arrow_column(c, f.dataType, t)
+         for c, f, t in zip(cols, schema.fields, arrow.types)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def release(checkpoint: DataFrame, result) -> None:

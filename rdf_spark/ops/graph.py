@@ -77,7 +77,7 @@ def k_hop_neighbors(
     # dedup the seed driver-side: every later frontier is distinct and
     # disjoint from visited by construction, so unions never re-distinct
     seeds = sorted(set(start_iris))
-    frontier = spark.createDataFrame([(i,) for i in seeds], "node string")
+    frontier = fastpath.local_frame(spark, [(i,) for i in seeds], "node string")
     visited = frontier.localCheckpoint(eager=True)
     frontier = visited
     n_frontier = len(seeds)
@@ -387,8 +387,9 @@ def connected_components_star(
             (n.node, uf.find(n.node) if n.node in uf.parent else n.node)
             for n in nodes
         ]
-        return edges.sparkSession.createDataFrame(
-            _sorted_rows(out), _pair_type(raw, "u", "v")("node", "comp")
+        return fastpath.local_frame(
+            edges.sparkSession, _sorted_rows(out),
+            _pair_type(raw, "u", "v")("node", "comp"),
         )
 
     out, (e, all_nodes) = fastpath.try_local(
@@ -498,8 +499,9 @@ def _cc_min_label_local(
             "connected_components did not converge in %d rounds "
             "(graph diameter exceeds max_iter; raise max_iter)" % max_iter
         )
-    return edges.sparkSession.createDataFrame(
-        _sorted_rows(labels.items()), _pair_type(e, "u", "v")("node", "comp")
+    return fastpath.local_frame(
+        edges.sparkSession, _sorted_rows(labels.items()),
+        _pair_type(e, "u", "v")("node", "comp"),
     )
 
 
@@ -625,8 +627,8 @@ def _power_iteration_local(spark, edges_df, head, n_iter, damping,
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     t = _coerced_type(edges_df, "_s", "_d")
-    return spark.createDataFrame(
-        _sorted_rows(ranks.items()),
+    return fastpath.local_frame(
+        spark, _sorted_rows(ranks.items()),
         StructType([StructField("node", t), StructField("rank", DoubleType())]),
     )
 
@@ -676,8 +678,8 @@ def _power_iteration_rounds(proj: DataFrame, n_iter: int, damping: float,
     nodes = proj.select(F.col("_s").alias("node")).unionByName(
         proj.select(F.col("_d").alias("node")))
     if seeds is not None:
-        nodes = nodes.unionByName(proj.sparkSession.createDataFrame(
-            [(s,) for s in seeds], schema=nodes.schema))
+        nodes = nodes.unionByName(fastpath.local_frame(
+            proj.sparkSession, [(s,) for s in seeds], schema=nodes.schema))
     nodes = nodes.distinct().localCheckpoint(eager=True)
     out_deg = proj.groupBy(F.col("_s").alias("node")).agg(
         F.count(F.lit(1)).alias("od")
@@ -849,8 +851,8 @@ def _hits_local(spark, proj, head, n_iter: int, round_to: int) -> DataFrame:
     t = _coerced_type(proj, "src", "dst")
     # the final nodes⋈hub⋈auth inner equi-joins drop a null node row
     rows = [(n, hub[n], auth[n]) for n in nodes if n is not None]
-    return spark.createDataFrame(
-        _sorted_rows(rows),
+    return fastpath.local_frame(
+        spark, _sorted_rows(rows),
         StructType([StructField("node", t),
                     StructField("hub", DoubleType()),
                     StructField("authority", DoubleType())]),
@@ -941,8 +943,8 @@ def _triangle_count_local(spark, und: DataFrame, head) -> DataFrame:
                 tri[u] += 1
                 tri[v] += 1
                 tri[w] += 1
-    return spark.createDataFrame(
-        _sorted_rows(tri.items()),
+    return fastpath.local_frame(
+        spark, _sorted_rows(tri.items()),
         StructType([StructField("node", _coerced_type(und, "u", "v")),
                     StructField("triangles", LongType())]),
     )
@@ -978,8 +980,8 @@ def _link_predict_local(spark, und: DataFrame, head, max_degree: int,
     degs = sorted({deg[z] for z in centers})
     contrib = {}
     if degs:
-        rows = spark.createDataFrame(
-            [(d,) for d in degs], "degz long"
+        rows = fastpath.local_frame(
+            spark, [(d,) for d in degs], "degz long"
         ).select(
             "degz",
             F.round(F.lit(1.0) / F.log(F.col("degz").cast("double")), 9)
@@ -1009,8 +1011,8 @@ def _link_predict_local(spark, und: DataFrame, head, max_degree: int,
             float(_round_half_up(float(aa[(a, b)]), 6)),
         ))
     t = _coerced_type(und, "u", "v")
-    return spark.createDataFrame(
-        _sorted_rows(out),
+    return fastpath.local_frame(
+        spark, _sorted_rows(out),
         StructType([
             StructField("a", t), StructField("b", t),
             StructField("n_common", LongType()),
@@ -1165,7 +1167,7 @@ def _k_truss_local(spark, und: DataFrame, head, thresh: int,
             % max_iter
         )
     t = _pair_type(und, "u", "v")("u", "v")
-    return spark.createDataFrame(_sorted_rows(es), t)
+    return fastpath.local_frame(spark, _sorted_rows(es), t)
 
 
 def _k_core_local(spark, und: DataFrame, head, k: int,
@@ -1195,8 +1197,8 @@ def _k_core_local(spark, und: DataFrame, head, k: int,
             % max_iter
         )
     nodes = {u for u, _ in es} | {v for _, v in es}
-    return spark.createDataFrame(
-        sorted((n,) for n in nodes),
+    return fastpath.local_frame(
+        spark, sorted((n,) for n in nodes),
         StructType([StructField("node", _coerced_type(und, "u", "v"))]),
     )
 
@@ -1285,8 +1287,8 @@ def _lpa_local(spark, und: DataFrame, head, n_iter: int) -> DataFrame:
                 votes[lab] = votes.get(lab, 0) + 1
             new[node] = min(votes, key=lambda lab: (-votes[lab], lab))
         labels = new
-    return spark.createDataFrame(
-        _sorted_rows(labels.items()),
+    return fastpath.local_frame(
+        spark, _sorted_rows(labels.items()),
         _pair_type(und, "u", "v")("node", "label"),
     )
 
@@ -1490,8 +1492,8 @@ def _scc_local(
         nodes.add(u)
         nodes.add(v)
     if not pairs:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, scc string"
+        return fastpath.local_frame(
+            edges.sparkSession, [], "node string, scc string"
         )
     if None in nodes:
         raise RuntimeError(
@@ -1548,8 +1550,8 @@ def _scc_local(
                 pnode, _ = work[-1]
                 if low[node] < low[pnode]:
                     low[pnode] = low[node]
-    return edges.sparkSession.createDataFrame(
-        _sorted_rows(scc_of.items()),
+    return fastpath.local_frame(
+        edges.sparkSession, _sorted_rows(scc_of.items()),
         _pair_type(distinct_edges, "u", "v")("node", "scc"),
     )
 
@@ -1685,8 +1687,8 @@ def strongly_connected_components(
             "SCC peeling did not finish in %d phases" % max_phases
         )
     if done is None:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, scc string"
+        return fastpath.local_frame(
+            edges.sparkSession, [], "node string, scc string"
         )
     return done
 
@@ -1737,8 +1739,8 @@ def _sssp_local(spark, head, srcs, dist_type: str, max_iter: int):
         )
         dist = best
         if not changed:
-            return spark.createDataFrame(
-                _sorted_rows(dist.items()),
+            return fastpath.local_frame(
+                spark, _sorted_rows(dist.items()),
                 StructType([StructField("node", StringType()),
                             StructField("dist", out_field)]),
             )

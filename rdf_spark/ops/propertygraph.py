@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.terms import KIND_LITERAL, RDF_TYPE
 
 
@@ -157,6 +158,6 @@ def write_graphml(
     out.append("  </graph>")
     out.append("</graphml>")
     sc = triples.sparkSession
-    sc.createDataFrame(
-        [("\n".join(out),)], "value string"
+    fastpath.local_frame(
+        sc, [("\n".join(out),)], "value string"
     ).coalesce(1).write.mode(mode).text(path)

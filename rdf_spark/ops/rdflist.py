@@ -128,9 +128,9 @@ def _rdf_lists_local(spark, firsts_rows, rests_rows, max_len, stats,
     if not stats:
         from rdf_spark.ops.graph import _sorted_rows
 
-        return spark.createDataFrame(_sorted_rows(members), member_schema)
-    return spark.createDataFrame(
-        [(len(good), len(members), len(heads) - len(good))],
+        return fastpath.local_frame(spark, _sorted_rows(members), member_schema)
+    return fastpath.local_frame(
+        spark, [(len(good), len(members), len(heads) - len(good))],
         "n_lists long, n_members long, n_dropped_heads long",
     )
 
@@ -266,7 +266,7 @@ def rdf_lists(
     n_all_heads = heads.count()
     n_good = good_heads.count()
     n_members = members.count()
-    return triples.sparkSession.createDataFrame(
-        [(n_good, n_members, n_all_heads - n_good)],
+    return fastpath.local_frame(
+        triples.sparkSession, [(n_good, n_members, n_all_heads - n_good)],
         "n_lists long, n_members long, n_dropped_heads long",
     )

@@ -94,7 +94,7 @@ def _schema_closure_with_local(
         closed = _closure_local([(r[0], r[1]) for r in head])
         cols = edges.columns
         schema = "%s string, %s string" % (cols[0], cols[1])
-        return edges.sparkSession.createDataFrame(closed, schema), closed
+        return fastpath.local_frame(edges.sparkSession, closed, schema), closed
 
     out, (result,) = fastpath.try_local([edges.distinct()], local)
     if out is not None:
@@ -222,13 +222,13 @@ def rdfs_closure(
                     full.add((p, d))
             return sorted(full, key=lambda t: (t[0], t[1] or ""))
 
-        sp_plus = spark.createDataFrame(sorted(sp_pairs), pair_schema)
-        sc_plus = spark.createDataFrame(sorted(sc_pairs), pair_schema)
-        dom_full = spark.createDataFrame(
-            _compose_local(by_pred[RDFS_DOMAIN]), "prop string, cls string"
+        sp_plus = fastpath.local_frame(spark, sorted(sp_pairs), pair_schema)
+        sc_plus = fastpath.local_frame(spark, sorted(sc_pairs), pair_schema)
+        dom_full = fastpath.local_frame(
+            spark, _compose_local(by_pred[RDFS_DOMAIN]), "prop string, cls string"
         )
-        rng_full = spark.createDataFrame(
-            _compose_local(by_pred[RDFS_RANGE]), "prop string, cls string"
+        rng_full = fastpath.local_frame(
+            spark, _compose_local(by_pred[RDFS_RANGE]), "prop string, cls string"
         )
         return sp_plus, sc_plus, dom_full, rng_full, sp_pairs
 
@@ -684,8 +684,8 @@ def owl_property_closure(
             return None
         from rdf_spark.ops.graph import _sorted_rows
 
-        return triples.sparkSession.createDataFrame(
-            _sorted_rows(new_rows), edges_lazy.schema,
+        return fastpath.local_frame(
+            triples.sparkSession, _sorted_rows(new_rows), edges_lazy.schema,
         )
 
     new_edges, (edges,) = fastpath.try_local([edges_lazy], local)

@@ -67,6 +67,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdf_spark.ops import fastpath
 from rdf_spark.terms import (
     KIND_BLANK,
     KIND_IRI,
@@ -110,8 +111,8 @@ def _targets(triples: DataFrame, shape: dict) -> DataFrame:
     tn = shape.get("target_node")
     if tn:
         parts.append(
-            triples.sparkSession.createDataFrame(
-                [(n,) for n in tn], "focus string"
+            fastpath.local_frame(
+                triples.sparkSession, [(n,) for n in tn], "focus string"
             )
         )
     tso = shape.get("target_subjects_of")
@@ -771,9 +772,10 @@ def validate(triples: DataFrame, shapes: list[dict],
         branches.extend(_combinator_violations(triples, targets, shape))
         branches.extend(_sparql_violations(triples, targets, shape))
     if not branches:
-        return triples.sparkSession.createDataFrame(
-            [], "focus string, shape_id string, path string, "
-                "constraint string, value string, expected string"
+        return fastpath.local_frame(
+            triples.sparkSession, [],
+            "focus string, shape_id string, path string, "
+            "constraint string, value string, expected string"
         )
     out = branches[0]
     for b in branches[1:]:

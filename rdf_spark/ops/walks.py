@@ -142,8 +142,8 @@ def _walks_local(spark, ehead, shead, walk_len: int, n_walks: int):
                 rows.append((start, w, t, node))
     from rdf_spark.ops.graph import _sorted_rows
 
-    return spark.createDataFrame(
-        _sorted_rows(rows),
+    return fastpath.local_frame(
+        spark, _sorted_rows(rows),
         "start string, walk int, step int, node string",
     )
 

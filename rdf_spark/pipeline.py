@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import weakref
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -60,16 +61,28 @@ def subject_bucket(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("s")), F.lit(n_buckets)).cast("int")
 
 
+#: SparkContext → {gazetteer rows: broadcast}: the broadcasts of
+#: :func:`build_shard_triples`, which cannot destroy its own (the frames
+#: it returns read it lazily), so calls over one gazetteer share one
+_ALIAS_BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def build_shard_triples(pages: DataFrame, aliases: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One shard's logical plan: returns (final_triples, quarantine).
 
     Extraction + Turtle parse + mention scoring run FUSED in a single
     narrow mapInArrow stage (one scan of pages; see
     extraction.fused_extract_parse_link) — the only shuffle in the shard
-    is the final dedup aggregate.
+    is the final dedup aggregate.  The gazetteer is broadcast once per
+    session and content: repeated calls over equal ``aliases`` rows
+    reuse the first call's broadcast.
     """
-    alias_rows = [(r.surface, r.entity_iri, r.prior) for r in aliases.collect()]
-    alias_bc = pages.sparkSession.sparkContext.broadcast(alias_rows)
+    alias_rows = tuple((r.surface, r.entity_iri, r.prior) for r in aliases.collect())
+    sc = pages.sparkSession.sparkContext
+    shared = _ALIAS_BROADCASTS.setdefault(sc, {})
+    if alias_rows not in shared:
+        shared[alias_rows] = sc.broadcast(list(alias_rows))
+    alias_bc = shared[alias_rows]
     tagged = extraction.fused_extract_parse_link(pages, alias_bc)
     # NOTE: triples and quarantine are two consumers of the same narrow
     # stage; run_pipeline persists `tagged` per shard to avoid a second

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rdf_spark.encoders import term_nt_col
+from rdf_spark.ops import fastpath
 from rdf_spark.parsing import (
     RDF_OBJECT,
     RDF_PREDICATE,
@@ -56,12 +57,15 @@ _MINTED_RE = r"^(urn:rdfstar:|_:qt)[0-9a-f]{32}$"
 
 def _statement_sers(
     df: DataFrame, max_depth: int, fold: str = "minted"
-) -> DataFrame:
-    """(node, ser): the ``<< s p o >>`` serialization of every foldable
-    statement node, with nested statement references resolved up to
-    ``max_depth`` levels.  ``fold="minted"`` restricts to decoder-minted
-    node ids (see :data:`_MINTED_RE`); ``fold="all"`` folds any complete
-    reification (identity-destroying on round-trip — opt-in only)."""
+) -> tuple[DataFrame, DataFrame]:
+    """``(sers, checkpoint)``: ``sers`` is (node, ser), the ``<< s p o
+    >>`` serialization of every foldable statement node, with nested
+    statement references resolved up to ``max_depth`` levels;
+    ``checkpoint`` is the last round's local checkpoint, which ``sers``
+    reads (the earlier rounds' are released as each next round is
+    taken).  ``fold="minted"`` restricts to decoder-minted node ids (see
+    :data:`_MINTED_RE`); ``fold="all"`` folds any complete reification
+    (identity-destroying on round-trip — opt-in only)."""
     if fold not in ("minted", "all"):
         raise ValueError(f"fold must be 'minted' or 'all', got {fold!r}")
     typed = (
@@ -176,7 +180,7 @@ def _statement_sers(
             F.col("ser").alias("_s"),
             F.col("res").alias("_r"),
         )
-        cur = ser_round(
+        prev, cur = cur, ser_round(
             cur.drop("_sub_ser", "_obj_ser", "_sub_res", "_obj_res",
                      "ser", "res")
             .join(
@@ -194,9 +198,10 @@ def _statement_sers(
                 "left",
             ).drop("_n")
         ).localCheckpoint(eager=True)
+        fastpath.release(prev, None)
     # an UNRESOLVED node (nesting deeper than max_depth) is not folded —
     # it and everything above it stay fully reified (lossless)
-    return cur.filter(F.col("res")).select("node", "ser")
+    return cur.filter(F.col("res")).select("node", "ser"), cur
 
 
 def encode_ntriples_star(
@@ -216,8 +221,20 @@ def encode_ntriples_star(
     ``fold="minted"`` (default) folds only decoder-minted statement ids
     (``urn:rdfstar:``/``_:qt`` + md5) so hand-reified nodes with their
     own IRIs keep their identity on round-trip; ``fold="all"`` folds
-    any complete reification."""
-    sers = _statement_sers(df, max_depth, fold=fold)
+    any complete reification.
+
+    The result reads one local checkpoint (the last nesting round's),
+    held until the JVM collects it; :func:`write_ntriples_star` frees
+    it once the write returns."""
+    return _encode(df, max_depth, fold)[0]
+
+
+def _encode(
+    df: DataFrame, max_depth: int, fold: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(lines, checkpoint)``: :func:`encode_ntriples_star`'s lines and
+    the local checkpoint they read."""
+    sers, checkpoint = _statement_sers(df, max_depth, fold=fold)
     folded_nodes = sers.select(F.col("node"))
     non_reif = df.filter(~_is_reif_row())
 
@@ -279,14 +296,17 @@ def encode_ntriples_star(
             ).alias("value")
         )
     )
-    return lines
+    return lines, checkpoint
 
 
 def write_ntriples_star(
     df: DataFrame, path: str, mode: str = "overwrite",
     max_depth: int = 4, fold: str = "minted",
 ) -> None:
-    """Write the star-folded N-Triples lines as text files."""
-    encode_ntriples_star(
-        df, max_depth=max_depth, fold=fold
-    ).write.mode(mode).text(path)
+    """Write the star-folded N-Triples lines as text files; no local
+    checkpoint taken for the encoding outlives the write."""
+    lines, checkpoint = _encode(df, max_depth, fold)
+    try:
+        lines.write.mode(mode).text(path)
+    finally:
+        fastpath.release(checkpoint, None)

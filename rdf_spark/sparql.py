@@ -1723,7 +1723,8 @@ def _reach_from(edges: DataFrame, start: str) -> DataFrame:
             nxt = adj.get(x)
             if nxt:
                 stack.extend(nxt)
-        return edges.sparkSession.createDataFrame(
+        return fastpath.local_frame(
+            edges.sparkSession,
             sorted(((v,) for v in seen), key=lambda t: t[0] or ""),
             "node string",
         )
@@ -1819,7 +1820,8 @@ def _closure_pairs(edges: DataFrame) -> DataFrame:
         closed = _closure_pairs_local([(r[0], r[1]) for r in head])
         if closed is None:
             return None
-        return edges.sparkSession.createDataFrame(
+        return fastpath.local_frame(
+            edges.sparkSession,
             sorted(closed, key=lambda t: (t[0] or "", t[1] or "")),
             "_src string, _dst string",
         )
@@ -1935,7 +1937,7 @@ def _compile_generic_path(triples: DataFrame, s: str, node: tuple, o: str,
             reach = _reach_from(inner, anchor)
         if node[2] in ("*", "?"):  # zero-length: anchor reaches itself
             reach = reach.unionByName(
-                spark.createDataFrame([(anchor,)], "node string")
+                fastpath.local_frame(spark, [(anchor,)], "node string")
             ).distinct()
         if var_term.startswith("?"):
             return reach.withColumnRenamed("node", var_term[1:])
@@ -1979,7 +1981,7 @@ def _compile_path(triples: DataFrame, path, idx: int = 0) -> DataFrame:
         anchor, var_term = o, s
     if mod == "*":  # zero-length path: the anchor reaches itself
         reach = reach.unionByName(
-            spark.createDataFrame([(anchor,)], "node string")
+            fastpath.local_frame(spark, [(anchor,)], "node string")
         ).distinct()
     if var_term.startswith("?"):
         return reach.withColumnRenamed("node", var_term[1:])
@@ -2064,8 +2066,8 @@ def _compile_group(triples: DataFrame, g: _Group,
     if df is not None:  # a VALUES-only group reaches here with df=None
         df = df.drop(*[c for c in df.columns if c.startswith("_path_m")])
     for vars_, rows in g.values:
-        part = triples.sparkSession.createDataFrame(
-            rows, ", ".join(f"{v} string" for v in vars_)
+        part = fastpath.local_frame(
+            triples.sparkSession, rows, ", ".join(f"{v} string" for v in vars_)
         )
         if df is None:
             df = part
@@ -2470,11 +2472,11 @@ def sparql_update(triples: DataFrame, update: str) -> DataFrame:
             ins = (_instantiate_template(sols, op.insert)
                    if op.insert else None)
         else:
-            dele = (spark.createDataFrame(
-                op.delete, "s string, p string, o string")
+            dele = (fastpath.local_frame(
+                spark, op.delete, "s string, p string, o string")
                 if op.delete else None)
-            ins = (spark.createDataFrame(
-                op.insert, "s string, p string, o string")
+            ins = (fastpath.local_frame(
+                spark, op.insert, "s string, p string, o string")
                 if op.insert else None)
         if dele is not None:
             cur = cur.join(dele, ["s", "p", "o"], "left_anti")

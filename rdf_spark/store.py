@@ -40,6 +40,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rdf_spark.ops import fastpath
+
 #: columns whose (null-safe) equality defines triple identity for merges
 _LINK_PRED = "http://kg.example/vocab#mentions"
 
@@ -124,7 +126,7 @@ class ParquetBucketStore:
         except AnalysisException as e:
             if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
                 raise
-            return spark.createDataFrame([], "bucket int, n long, links long")
+            return fastpath.local_frame(spark, [], "bucket int, n long, links long")
         return triples.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("p") == _LINK_PRED).cast("long")).alias("links"),

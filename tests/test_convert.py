@@ -326,3 +326,20 @@ def test_convert_count_is_observed_once(spark, tmp_path, new_sql_plans):
     star = str(tmp_path / "plain_star")
     assert convert.convert(spark, str(plain), "ntriples", star,
                            "ntriples-star") == _n_lines(star) == 4
+
+
+def test_ntriples_star_conversion_releases_checkpoints(spark, tmp_path):
+    """The N-Triples-star encoder's local checkpoints (the input's and
+    each nesting round's) are freed once the write returns."""
+    src = tmp_path / "mixed"
+    src.mkdir()
+    (src / "a.nt").write_text(MIXED_NT)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for i in range(3):
+        out = str(tmp_path / f"star{i}")
+        assert convert.convert(spark, str(src), "ntriples", out,
+                               "ntriples-star") == 9
+        assert any("<< " in ln for f in glob.glob(out + "/part-*")
+                   for ln in open(f))
+    assert persisted().size() == before

@@ -1,13 +1,17 @@
 """ops.fastpath: the one driver fast-path helper — checkpoint reuse,
-bail-out, checkpoint release, and the rule that no operator probes its
-input by hand."""
+bail-out, checkpoint release, the rule that no operator probes its
+input by hand, and the Arrow hand-off every driver-built frame takes."""
 
+import ast
+import datetime as dt
 import pathlib
 import re
+from decimal import Decimal
 
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from rdf_spark import sparql
 from rdf_spark.ops import bpe, dedup, fastpath, graph, rdflist, reasoning, walks
@@ -156,4 +160,79 @@ def test_no_hand_rolled_probe_outside_fastpath():
         for text in [p.read_text()]
         for m in probe.finditer(text)
     ]
+    assert offenders == []
+
+
+_LOCAL_FRAME_CASES = {
+    "string": ([("a",), (None,), ("é☃ \"q\"",)], "x string"),
+    "int": ([(1,), (-2**31,), (None,)], "x int"),
+    "bigint": ([(2**40,), (-2**63,), (None,)], "x bigint"),
+    "double": ([(1.5,), (float("inf"),), (-0.0,), (None,)], "x double"),
+    "boolean": ([(True,), (False,), (None,)], "x boolean"),
+    # more digits than the scale: rounded HALF_UP, as the JVM does
+    "decimal": ([(Decimal("1.23456"),), (Decimal("-2.005"),),
+                 (Decimal("7"),), (None,)], "x decimal(10,2)"),
+    "date": ([(dt.date(2020, 1, 2),), (dt.date(1969, 12, 31),), (None,)],
+             "x date"),
+    # a naive timestamp is local time; an aware one keeps its instant
+    "timestamp": ([(dt.datetime(2020, 1, 2, 3, 4, 5, 678901),),
+                   (dt.datetime(2020, 1, 2, 3, 4, 5, tzinfo=dt.timezone(
+                       dt.timedelta(hours=5))),), (None,)], "x timestamp"),
+    "null_only": ([(None, None), (None, None)], "a string, b double"),
+    "zero_rows": ([], "a string, b bigint, c double"),
+    "not_nullable": ([("a", 1), ("b", None)], StructType([
+        StructField("a", StringType(), False),
+        StructField("b", LongType(), True)])),
+    "mixed": ([("n1", 3, 0.25, True), ("n2", None, None, False)],
+              "node string, k int, rank double, hit boolean"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LOCAL_FRAME_CASES))
+def test_local_frame_matches_create_dataframe(spark, case):
+    """The Arrow hand-off gives exactly the frame of
+    ``createDataFrame(rows, schema)`` — rows, column names, types and
+    nullability — as a LocalRelation."""
+    rows, schema = _LOCAL_FRAME_CASES[case]
+    want = spark.createDataFrame(rows, schema)
+    got = fastpath.local_frame(spark, iter(rows), schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert got._jdf.queryExecution().analyzed().getClass().getSimpleName() \
+        == "LocalRelation"
+
+
+@pytest.mark.parametrize("op", ["pagerank", "connected_components",
+                                "triangle_count"])
+def test_replica_results_read_no_python_rdd(spark, op):
+    """A replica's result is built from an Arrow table, so no leaf of
+    its plan is a LogicalRDD (a pickled Python RDD whose every read
+    runs Python tasks)."""
+    e = _edges(spark, "src string, dst string" if op == "pagerank"
+               else "a string, b string")
+    out = getattr(graph, op)(e)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    kinds = {leaves.apply(i).getClass().getSimpleName()
+             for i in range(leaves.size())}
+    assert kinds == {"LocalRelation"}
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Every frame built from driver rows in the library and its job
+    CLIs goes through ops.fastpath.local_frame."""
+    repo = pathlib.Path(fastpath.__file__).resolve().parents[2]
+    offenders = []
+    for top in ("rdf_spark", "jobs"):
+        for p in sorted((repo / top).rglob("*.py")):
+            tree = ast.parse(p.read_text())
+            allowed = set()
+            if p.name == "fastpath.py":
+                fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef)
+                          and n.name == "local_frame")
+                allowed = {id(n) for n in ast.walk(fn)}
+            offenders += [
+                f"{p.relative_to(repo)}:{n.lineno}" for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute) and n.attr == "createDataFrame"
+                and id(n) not in allowed
+            ]
     assert offenders == []

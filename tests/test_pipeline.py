@@ -670,6 +670,25 @@ def test_run_pipeline_single_gazetteer_collect(spark, tmp_path):
     assert sum(r.n_triples_final for r in results) > 0
 
 
+def test_build_shard_triples_shares_gazetteer_broadcast(spark, monkeypatch):
+    """Repeated builds over the same gazetteer hand the fused stage one
+    broadcast, not a new one per call (none of them can be destroyed:
+    the returned frames read it lazily)."""
+    seen = []
+    fused = extraction.fused_extract_parse_link
+
+    def spy(pages, alias_rows, *args, **kwargs):
+        seen.append(alias_rows)
+        return fused(pages, alias_rows, *args, **kwargs)
+
+    monkeypatch.setattr(extraction, "fused_extract_parse_link", spy)
+    pages = datagen.pages(spark, 5)
+    for _ in range(2):
+        pipeline.build_shard_triples(pages, datagen.aliases(spark))
+    assert len(seen) == 2 and seen[0] is seen[1]
+    assert sorted(seen[0].value) == sorted(datagen.ENTITIES)
+
+
 def test_fused_broadcast_gazetteer_equivalent(spark):
     """fused_extract_parse_link(pages, Broadcast) must produce exactly the
     rows of the closure-shipped list path — including with the matching
